@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -11,7 +12,8 @@ object BenchOne {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    catch { case NonFatal(_) => () }
     for (name <- args; rep <- 1 to 3) {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-job profiler main — runs named SparkEntry queries (2 reps: cold
   * then steady) with a listener that records every Spark job's wall
@@ -38,7 +39,7 @@ object Profile {
     })
 
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     for (name <- args; rep <- 1 to 2) {
       jobs.clear()

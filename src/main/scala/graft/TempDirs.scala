@@ -22,13 +22,14 @@ object TempDirs {
 
   /** Scratch root for all scoped dirs (stream staging, checkpoints,
     * delta logs): `SPARK_GRAFT_TMPDIR` if set, else `/dev/shm` when it
-    * exists and is writable, else `java.io.tmpdir`. Streaming drains
-    * fsync metadata logs and commit state-store deltas EVERY trigger;
-    * on this box `/tmp` is disk-backed while a 126 GiB tmpfs sits idle
-    * — putting ephemeral scratch on the fastest local storage is the
-    * guide §6 move (on a production cluster: local NVMe), and every
-    * byte here is per-run scratch wiped at JVM exit, never a cached
-    * result.
+    * exists and is writable, else `java.io.tmpdir`. Every byte here is
+    * per-run scratch wiped at JVM exit, never a cached result, so it
+    * may as well live in memory. Where it lives is not what made
+    * streaming commits slow: a state-store commit cost ~90–100 ms on
+    * `/dev/shm` too, because Hadoop's local file system forked `chmod`
+    * and `readlink` helpers for each checkpoint file; the drains now
+    * use [[graft.streaming.LocalCheckpointFileManager]], which forks
+    * none.
     */
   private lazy val root: Path = {
     val candidate = sys.env.get("SPARK_GRAFT_TMPDIR")
