@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 /** Benchmark main — times every SparkEntry query at the given SF and
   * prints ONE JSON line (driver contract).
@@ -25,11 +28,20 @@ import java.nio.file.{Files, Paths}
   * consumer — that cost is visible in `wall` and in the per-rep dump in
   * BENCH_FULL.json, while medians show the steady (materialize-once)
   * production shape.
+  *
+  * With query names (`sbt "runMain graft.Bench q01_pricing_summary …"`)
+  * only those run, through the same warm-up and reps, with a listener
+  * that records every Spark job's wall time and description: each rep
+  * prints its time and job total, the last rep its per-job lines, so
+  * "where do this query's seconds go" is answered with evidence. A
+  * named run prints the headline line but leaves BENCH_FULL.json alone.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val only = args.toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Opt-in for large scale factors (the 10× replica): evict the memo
     // caches + force a cleaner pass between query FAMILIES, so one
@@ -39,32 +51,9 @@ object Bench {
     // fits the default heap in ONE session (the r10 refresh needed a
     // two-session composite at 8g); without it, give sbt -mem 65536.
     val evictBetweenFamilies = sys.env.get("SPARK_GRAFT_BENCH_EVICT").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // localCheckpoint blocks from finished queries are reclaimed by
-      // the ContextCleaner only after a driver GC notices the RDD is
-      // unreachable; the default periodic-GC interval (30 min) lets
-      // hundreds of queries' blocks pile up in a single-JVM sweep
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // local-mode liveness: the "executor" IS this JVM, so the
-      // heartbeat check can only FALSE-positive — a long stop-the-world
-      // GC (or a host stall; this box has measured multi-minute freezes
-      // under memory pressure) exceeds the 120 s default and shuts the
-      // context down mid-sweep (observed once at 10×: 148.9 s without
-      // heartbeats → executor removed → every later query dead). On a
-      // real cluster these guards matter; in one process they are pure
-      // downside — give them sweep-sized headroom.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val jobs = new JobLog
+    if (only.nonEmpty) spark.sparkContext.addSparkListener(jobs)
 
     // Machine-load fingerprint (verdict r10 item 7): benches on this
     // box swing with concurrent load (a +36% uniform shift under a
@@ -173,9 +162,10 @@ object Bench {
       val loadJson = s"""{"start":{$loadStart},"end":{$loadEnd},"evict":${evictBetweenFamilies}}"""
       val fullJson =
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","wall":${fmt(wall)},"reps":$reps,"failed":$failed,"partial":$partial,"nQueries":${results.size},"load":$loadJson,"memo_build":$memoJson,"queries":${toJson(results)},"queryReps":$repsJson,"sf":"$sfDir"}"""
-      try Files.writeString(Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")), fullJson + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] full dump failed: ${e.getMessage}") }
+      if (only.isEmpty)
+        try Files.writeString(Paths.get(
+          sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")), fullJson + "\n")
+        catch { case e: Throwable => System.err.println(s"[bench] full dump failed: ${e.getMessage}") }
 
       // Headline subset for the one-line contract output: slowest queries
       // dominate the total, so report the top cost centers plus the
@@ -189,7 +179,7 @@ object Bench {
           ("fam_" + f, ts(ts.size / 2))
       }
       val headline = (slowest ++ fams).distinct
-      println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","wall":${fmt(wall)},"reps":$reps,"failed":$failed,"partial":$partial,"nQueries":${results.size},"load":$loadJson,"full":"BENCH_FULL.json","queries":${toJson(headline)},"sf":"$sfDir"}""")
+      println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","wall":${fmt(wall)},"reps":$reps,"failed":$failed,"partial":$partial,"nQueries":${results.size},"load":$loadJson,"full":${if (only.isEmpty) "\"BENCH_FULL.json\"" else "null"},"queries":${toJson(headline)},"sf":"$sfDir"}""")
     }
 
     // The graceful-degradation hook (round-12 item 1b): a driver-side
@@ -208,8 +198,10 @@ object Bench {
     // All reps of a query run back-to-back: rep 1 absorbs any cold cache,
     // reps 2-3 measure steady state; the median of 3 discards the one
     // outlier either way.
+    val targets = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
     var prevFamily = ""
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    targets.foreach { case (name, fn) =>
       if (evictBetweenFamilies && family(name) != prevFamily) {
         Memo.evictAll()
         // SYNCHRONOUS reclamation: dropping references and waiting on
@@ -226,7 +218,12 @@ object Bench {
       }
       prevFamily = family(name)
       spark.sparkContext.setJobDescription(s"bench: $name")
-      val ts = (1 to reps).map(_ => runRetrying(name, fn))
+      val ts = (1 to reps).map { rep =>
+        jobs.clear()
+        val t = runRetrying(name, fn)
+        if (only.nonEmpty) jobs.report(name, rep, t, perJob = rep == reps)
+        t
+      }
       spark.sparkContext.setJobDescription(null)
       lock.synchronized {
         Memo.drainBuildLog().foreach { case (fam, sec) =>
@@ -241,5 +238,30 @@ object Bench {
     try Runtime.getRuntime.removeShutdownHook(hook)
     catch { case _: IllegalStateException => () } // already shutting down
     spark.stop()
+  }
+}
+
+/** Wall time and description of every Spark job since the last `clear`. */
+private final class JobLog extends SparkListener {
+  private val starts = new ConcurrentHashMap[Int, (Long, String)]
+  private val ended = new ConcurrentLinkedQueue[(Int, Long, String)]
+
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    starts.put(js.jobId, (js.time,
+      Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
+  override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+    val st = starts.remove(je.jobId)
+    if (st != null) ended.add((je.jobId, je.time - st._1, st._2)): Unit
+  }
+
+  def clear(): Unit = ended.clear()
+
+  def report(name: String, rep: Int, wall: Double, perJob: Boolean): Unit = {
+    val js = ended.asScala.toSeq.sortBy(_._1)
+    val jobSum = js.map(_._2).sum / 1e3
+    println(f"PROFILE $name rep$rep wall=$wall%.2f s jobs=${js.size} jobSum=$jobSum%.2f s")
+    if (perJob) js.foreach { case (id, ms, desc) =>
+      println(f"  job $id%4d ${ms / 1e3}%7.3f s  ${desc.linesIterator.mkString(" ")}")
+    }
   }
 }

@@ -1,0 +1,68 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+import graft.plans.{AsOfJoinStrategy, NanosRangePushdown, PushPartialTopK, TopKPerKeyStrategy}
+
+/** The one place the engine's SparkSession is built and its session
+  * setup is installed. Every main runs on [[local]], so plan dumps,
+  * per-job profiles, correctness dumps and the bench all describe the
+  * same engine config; the library entry points that need a rule or a
+  * parquet setting call [[install]], so a session built elsewhere
+  * (a user's, or a benchmark's own) gets the same setup on first use.
+  */
+object Session {
+
+  /** A `local[cpus]` session with the bench's settings and the engine's
+    * rules installed.
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // localCheckpoint blocks from finished queries are reclaimed by
+      // the ContextCleaner only after a driver GC notices the RDD is
+      // unreachable; the default periodic-GC interval (30 min) lets
+      // hundreds of queries' blocks pile up in a single-JVM sweep
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      // local-mode liveness: the "executor" IS this JVM, so the
+      // heartbeat check can only FALSE-positive — a long stop-the-world
+      // GC (or a host stall; shared hosts have shown multi-minute freezes
+      // under memory pressure) exceeds the 120 s default and shuts the
+      // context down mid-sweep (observed once at 10×: 148.9 s without
+      // heartbeats → executor removed → every later query dead). On a
+      // real cluster these guards matter; in one process they are pure
+      // downside — give them sweep-sized headroom.
+      .config("spark.executor.heartbeatInterval", "60s")
+      .config("spark.network.timeout", "1200s")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    install(spark)
+    spark
+  }
+
+  /** Installs the engine's planner strategies and optimizer rules
+    * (each at most once, appended in this order) and the parquet
+    * settings the `events` loaders read under:
+    *   - `nanosAsLong`: Spark's vectorized reader rejects parquet
+    *     TIMESTAMP(NANOS), so it is read as the raw int64 nanos;
+    *   - NTZ inference off, so TIMESTAMP(MICROS) vintages surface as
+    *     tz-independent epoch micros (see [[Tables.eventsRawNanos]]).
+    * Idempotent, and safe from concurrent query threads.
+    */
+  def install(spark: SparkSession): Unit = synchronized {
+    val x = spark.experimental
+    Seq(TopKPerKeyStrategy, AsOfJoinStrategy).filterNot(x.extraStrategies.contains)
+      .foreach(r => x.extraStrategies = x.extraStrategies :+ r)
+    Seq(PushPartialTopK, NanosRangePushdown).filterNot(x.extraOptimizations.contains)
+      .foreach(r => x.extraOptimizations = x.extraOptimizations :+ r)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+  }
+}

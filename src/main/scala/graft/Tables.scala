@@ -35,8 +35,7 @@ object Tables {
     */
   def eventsRawNanos(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    Session.install(s)
     val df = s.read.parquet(path)
     df.schema.fields.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType => df
@@ -60,10 +59,9 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     // user predicates on the derived ts_ns still push down to the scan
-    graft.plans.NanosRangePushdown.ensureInstalled(s)
+    // (NanosRangePushdown)
+    Session.install(s)
     val df = t(s, d, "events")
     if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumnRenamed("ts", "ts_ns")

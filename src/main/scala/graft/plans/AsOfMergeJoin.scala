@@ -131,9 +131,7 @@ object AsOfMergeJoin {
     */
   def asOfNative(left: DataFrame, right: DataFrame): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    graft.Session.install(spark)
     def attr(df: DataFrame, n: String): Attribute =
       df.queryExecution.analyzed.output.find(_.name == n)
         .getOrElse(throw new IllegalArgumentException(s"no column $n"))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -116,12 +115,4 @@ object NanosRangePushdown extends Rule[LogicalPlan] {
       val r = rewrite(cond)
       if (r fastEquals cond) f else f.copy(condition = r)
   }
-
-  /** Idempotent per-session installation (the [[TopKPerKey]] pattern);
-    * also injectable via `graft.GraftExtensions`.
-    */
-  def ensureInstalled(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(NanosRangePushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NanosRangePushdown
 }

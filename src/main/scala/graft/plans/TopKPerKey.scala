@@ -120,8 +120,8 @@ object TopKPerKeyStrategy extends SparkStrategy {
 object TopKPerKey {
 
   /** DataFrame API: top `k` rows per `keys` by `orderBy` descending.
-    * Installs the planner strategy on first use (idempotent); also
-    * injectable via `graft.GraftExtensions`.
+    * Installs the planner strategy on first use ([[graft.Session.install]]);
+    * also injectable via `graft.GraftExtensions`.
     *
     * API CONTRACT: rows whose `orderBy` value is null are FILTERED, not
     * ranked — a key with fewer than k non-null rows returns fewer than
@@ -133,12 +133,7 @@ object TopKPerKey {
   def topKPerKey(df: DataFrame, keyNames: Seq[String], orderBy: String,
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushPartialTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushPartialTopK
+    graft.Session.install(spark)
     val analyzed = df.queryExecution.analyzed
     val keyAttrs = keyNames.map(n => analyzed.output
       .find(_.name == n)

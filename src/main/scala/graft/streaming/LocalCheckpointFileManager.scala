@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * call. Every checkpoint file keeps its `.crc` sibling, verified on read,
   * and Spark's own state-file checksums still wrap the manager. A
   * no-overwrite publish onto an existing file throws Hadoop's
-  * `FileAlreadyExistsException`.
+  * `FileAlreadyExistsException` and leaves no temp file behind.
   *
   * Spark builds one manager per checkpoint log and per loaded state-store
   * provider, and loaded providers keep theirs, so every manager shares
@@ -42,6 +42,15 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileSystemBasedCheckpointFileManager(
       LocalCheckpointFileManager.requireLocal(path, hadoopConf), hadoopConf) {
   override protected val fs: FileSystem = LocalCheckpointFileManager.fs
+
+  /** A no-overwrite publish that loses to an existing file also removes
+    * its temp file (and the temp's `.crc`): Spark's output stream
+    * rethrows without deleting it, so every lost race left both behind.
+    */
+  override def renameTempFile(srcPath: Path, dstPath: Path,
+      overwriteIfPossible: Boolean): Unit =
+    try super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+    catch { case e: FileAlreadyExistsException => delete(srcPath); throw e }
 }
 
 object LocalCheckpointFileManager {

@@ -76,6 +76,7 @@ object StreamQueries {
     scala.collection.concurrent.TrieMap.empty[(String, Int, String), String]
 
   private def stageAsDirParts(s: SparkSession, path: String, n: Int): String = {
+    graft.Session.install(s) // events read as raw int64 nanos
     val fp = graft.Tables.fingerprintPath(path)
     stagedDirs.getOrElseUpdate((path, n, fp), {
       val d = graft.TempDirs.scoped("graft_stream_src")
@@ -172,7 +173,6 @@ object StreamQueries {
     */
   def streamIntervalCount(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val path = s"$dir/events.parquet"
       val src = stageAsDirParts(s, path, 2)
       val schema = s.read.parquet(src).schema
@@ -295,7 +295,6 @@ object StreamQueries {
     */
   def streamSessionStats(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       sessionStatsStream(s, src, maxFilesPerTrigger = Some(1))
     }
@@ -311,7 +310,6 @@ object StreamQueries {
     */
   def streamClickAttribution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     val staged = stageAsDirParts(s, path, 1)
     val schema = s.read.parquet(staged).schema
@@ -366,7 +364,6 @@ object StreamQueries {
     */
   def streamAttributionOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     val staged = stageAsDirParts(s, path, 1)
     val schema = s.read.parquet(staged).schema
@@ -452,7 +449,6 @@ object StreamQueries {
   def streamHourlyCounts(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageAsDirParts(s, s"$dir/events.parquet", 2)
     val schema = s.read.parquet(src).schema
     val lo = 1704412800000000000L // 2024-01-05T00:00:00Z epoch nanos
@@ -484,7 +480,6 @@ object StreamQueries {
   def streamMvCounts(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val agg = s.readStream.schema(schema)
@@ -514,7 +509,6 @@ object StreamQueries {
   def streamHllUsers(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val (idx, mv) = graft.operators.Sketches.hllRowSignals($"user_id")
@@ -763,7 +757,6 @@ object StreamQueries {
   def streamStaticEnrich(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 2)
       val schema = s.read.parquet(src).schema
       val profile = graft.Tables.events(s, dir)
@@ -800,7 +793,6 @@ object StreamQueries {
   def streamDropdupWatermark(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirCopies(s, s"$dir/events.parquet", 2)
       val schema = s.read.parquet(src).schema
       val deduped = s.readStream.schema(schema)
@@ -832,7 +824,6 @@ object StreamQueries {
   def streamTopkUsers(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val agg = s.readStream.schema(schema)
@@ -899,7 +890,6 @@ object StreamQueries {
     withStatePartitions(s, 8) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val ev = s.readStream.schema(schema)
@@ -939,7 +929,6 @@ object StreamQueries {
   def streamFunnel(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val perUser = s.readStream.schema(schema)
@@ -1016,7 +1005,6 @@ object StreamQueries {
       import s.implicits._
       import org.apache.spark.sql.types.{StructType, LongType}
       val Sk = graft.operators.Sketches
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val cntLog = graft.TempDirs.scoped("graft_dyadic_cntlog")
@@ -1172,7 +1160,6 @@ object StreamQueries {
   def streamAcf(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1195,7 +1182,6 @@ object StreamQueries {
   def streamPoissonBurst(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1217,7 +1203,6 @@ object StreamQueries {
   def streamEwma(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1239,7 +1224,6 @@ object StreamQueries {
   def streamChangepoint(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1294,7 +1278,6 @@ object StreamQueries {
   def streamPacf(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1317,7 +1300,6 @@ object StreamQueries {
   def streamArForecast(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1343,7 +1325,6 @@ object StreamQueries {
   def streamValueDrift(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val D = graft.operators.DataQuality
@@ -1412,7 +1393,6 @@ object StreamQueries {
   def streamLttb(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)
@@ -1432,7 +1412,6 @@ object StreamQueries {
   def streamAnomalyMad(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, 8) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
       val schema = s.read.parquet(src).schema
       val counts = s.readStream.schema(schema)

@@ -23,14 +23,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, factorS) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
     try run(spark, inDir, outDir, factorS.toInt)
     finally spark.stop()
   }
@@ -40,8 +33,7 @@ object ScaleUp {
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
       factor: Int): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    graft.Session.install(spark)
     new java.io.File(outDir).mkdirs()
 
     def read(t: String): DataFrame =

@@ -1,0 +1,30 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** The program's sources as numbered code lines, for the source-gate specs. */
+object SourceLines {
+  val root: Path = Paths.get("src/main/scala")
+
+  def files: Seq[Path] = Files.walk(root).iterator().asScala
+    .filter(_.toString.endsWith(".scala")).toSeq
+
+  /** `f`'s lines numbered from 1, with comments dropped. */
+  def code(f: Path): Seq[(String, Int)] =
+    Files.readAllLines(f).asScala.toSeq.zipWithIndex
+      .map { case (l, i) => (l.replaceAll("//.*$", ""), i + 1) }
+      .filterNot { case (l, _) => Seq("*", "/*").exists(l.trim.startsWith) }
+
+  /** Line numbers of the object member `def name` in `f`, from its
+    * signature to its closing brace.
+    */
+  def defLines(f: Path, name: String): Range = {
+    val lines = code(f)
+    val from = lines.collectFirst { case (l, n) if l.contains(s"def $name(") => n }
+    assert(from.isDefined, s"$f no longer defines `def $name(`")
+    val to = lines.collectFirst { case (l, n) if n > from.get && l == "  }" => n }.get
+    from.get to to
+  }
+}

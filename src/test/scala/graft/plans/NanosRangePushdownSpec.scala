@@ -63,7 +63,7 @@ class NanosRangePushdownSpec extends AnyFunSuite {
     // for null rows (NOT(NULL)=NULL drops, NOT(FALSE)=TRUE keeps). The
     // fixture ts is non-null, so build a 3-row frame with a null.
     import spark.implicits._
-    NanosRangePushdown.ensureInstalled(spark)
+    graft.Session.install(spark)
     val df = Seq(Some("2024-01-10 00:00:00"), Some("2024-01-11 00:00:00"),
         None).toDF("s")
       .selectExpr("CAST(s AS TIMESTAMP) AS ts")
@@ -89,7 +89,7 @@ class NanosRangePushdownSpec extends AnyFunSuite {
     // pushdown in play) and pins every rewrite family's row set against
     // counts computed from the raw data.
     import spark.implicits._
-    NanosRangePushdown.ensureInstalled(spark)
+    graft.Session.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("nulls_ts").toString
     val rows = Seq(Some("2024-01-10 01:02:03.000004"),
       Some("2024-01-12 00:00:00"), None, Some("2024-01-14 23:59:59.999999"),

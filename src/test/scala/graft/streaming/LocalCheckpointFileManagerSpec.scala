@@ -56,6 +56,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     put(fm, p, "first", overwrite = false)
     intercept[FileAlreadyExistsException](put(fm, p, "second", overwrite = false))
     assert(get(fm, p) == "first") // read back against its intact .crc
+    assert(entries(dir) == Set("1", ".1.crc"), "the losing publish left its temp file")
     put(fm, p, "third", overwrite = true)
     assert(get(fm, p) == "third")
   }
