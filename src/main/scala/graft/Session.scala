@@ -2,14 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.NioLocalFileSystem
 import graft.plans.{AsOfJoinStrategy, NanosRangePushdown, PushPartialTopK, TopKPerKeyStrategy}
+import graft.streaming.LocalCheckpointFileManager
 
 /** The one place the engine's SparkSession is built and its session
   * setup is installed. Every main runs on [[local]], so plan dumps,
   * per-job profiles, correctness dumps and the bench all describe the
-  * same engine config; the library entry points that need a rule or a
-  * parquet setting call [[install]], so a session built elsewhere
-  * (a user's, or a benchmark's own) gets the same setup on first use.
+  * same engine config; the library entry points that need a rule, a
+  * parquet setting or fork-free local I/O call [[install]], so a session
+  * built elsewhere (a user's, or a benchmark's own) gets the same setup
+  * on first use.
   */
 object Session {
 
@@ -48,12 +51,18 @@ object Session {
   }
 
   /** Installs the engine's planner strategies and optimizer rules
-    * (each at most once, appended in this order) and the parquet
-    * settings the `events` loaders read under:
+    * (each at most once, appended in this order) and the session
+    * settings:
     *   - `nanosAsLong`: Spark's vectorized reader rejects parquet
     *     TIMESTAMP(NANOS), so it is read as the raw int64 nanos;
     *   - NTZ inference off, so TIMESTAMP(MICROS) vintages surface as
-    *     tz-independent epoch micros (see [[Tables.eventsRawNanos]]).
+    *     tz-independent epoch micros (see [[Tables.eventsRawNanos]]);
+    *   - fork-free local I/O: `file:` resolves to [[NioLocalFileSystem]]
+    *     and checkpoints go through [[LocalCheckpointFileManager]], so no
+    *     parquet write, checkpoint log or state-store file forks `chmod`
+    *     or `readlink`. Hadoop caches one `file:` file system per user
+    *     whatever `fs.file.impl` says, and it may be cached already, so
+    *     the session bypasses that cache.
     * Idempotent, and safe from concurrent query threads.
     */
   def install(spark: SparkSession): Unit = synchronized {
@@ -62,7 +71,11 @@ object Session {
       .foreach(r => x.extraStrategies = x.extraStrategies :+ r)
     Seq(PushPartialTopK, NanosRangePushdown).filterNot(x.extraOptimizations.contains)
       .foreach(r => x.extraOptimizations = x.extraOptimizations :+ r)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+      "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

@@ -27,9 +27,9 @@ object TempDirs {
     * may as well live in memory. Where it lives is not what made
     * streaming commits slow: a state-store commit cost ~90–100 ms on
     * `/dev/shm` too, because Hadoop's local file system forked `chmod`
-    * and `readlink` helpers for each checkpoint file; the drains now
-    * use [[graft.streaming.LocalCheckpointFileManager]], which forks
-    * none.
+    * and `readlink` helpers for each checkpoint file; an installed
+    * session ([[graft.Session.install]]) writes every local file and
+    * checkpoint without them.
     */
   private lazy val root: Path = {
     val candidate = sys.env.get("SPARK_GRAFT_TMPDIR")

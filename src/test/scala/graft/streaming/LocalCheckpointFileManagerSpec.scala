@@ -1,20 +1,29 @@
 package graft.streaming
 
 import java.io.File
+import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fork-free checkpoint manager keeps the guarantees Spark's
   * checkpoint logs and state stores rely on: atomic publish, no silent
   * overwrite, clean cancel, and checksums verified on read.
+  *
+  * The manager uses the path's own file system, so it runs here under
+  * the Hadoop settings an installed session gives it: the stock `file:`
+  * file system on this classpath (Hive's `ProxyLocalFileSystem`) does
+  * not rename onto an existing file.
   */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
-  private val conf = new Configuration()
+  private lazy val conf: Configuration = {
+    graft.Session.install(graft.TestSpark.spark)
+    graft.TestSpark.spark.sessionState.newHadoopConf()
+  }
 
   private def fresh(): (LocalCheckpointFileManager, File) = {
     val dir = new File(graft.TempDirs.scoped("lcfm"))
@@ -83,13 +92,18 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     intercept[ChecksumException](get(fm, p))
   }
 
-  test("non-file: paths are rejected") {
-    Seq("hdfs://namenode:8020/ckpt", "s3a://bucket/ckpt").foreach { uri =>
-      intercept[IllegalArgumentException](new LocalCheckpointFileManager(new Path(uri), conf))
-    }
+  test("a non-file: checkpoint goes through its own scheme's file system") {
+    val dir = new File(graft.TempDirs.scoped("lcfm"))
+    val hc = new Configuration(conf)
+    hc.setClass("fs.lcfmtest.impl", classOf[SchemeFs], classOf[FileSystem])
+    val fm = new LocalCheckpointFileManager(new Path("lcfmtest", null, dir.getPath), hc)
+    put(fm, new Path("lcfmtest", null, dir.getPath + "/1"), "remote", overwrite = false)
+    // the scheme's unchecksummed file system wrote it, not the local one
+    assert(entries(dir) == Set("1"))
+    assert(new String(Files.readAllBytes(new File(dir, "1").toPath), UTF_8) == "remote")
   }
 
-  test("Spark's factory builds this manager from the setting the drain scopes") {
+  test("Spark's factory builds this manager from the setting Session.install makes") {
     val (_, dir) = fresh()
     val hc = new Configuration(conf)
     hc.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
@@ -97,4 +111,12 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(fm.isInstanceOf[LocalCheckpointFileManager])
     assert(fm.isLocal)
   }
+}
+
+/** The local disk under a scheme of its own (`lcfmtest:`) and without
+  * checksums, standing in for a remote file system.
+  */
+class SchemeFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("lcfmtest:///")
+  override def getScheme: String = "lcfmtest"
 }

@@ -7,9 +7,13 @@
 # `ls` first on PATH. Each shim appends its command line to a log and
 # then execs the real binary, so CMD behaves as it would without them.
 # Afterwards it prints spawn counts by command, by the kind of
-# `graft.TempDirs.scoped` dir a path sits under (`graft_ckpt*`,
-# `graft_delta_log*`, ...), and by path pattern (digits and hex ids
-# folded to `#`). CMD's own exit code is passed through.
+# program dir a path sits under (a `graft.TempDirs.scoped` dir such as
+# `graft_ckpt*` or `graft_delta_log*`, or a `ckpt/` checkpoint dir of a
+# query started elsewhere), and by path pattern (digits and hex ids
+# folded to `#`). The last line, `program_spawns=N`, counts the spawns
+# on paths under a run's work dir: the program's scratch root
+# (`graft-scratch/`) or a benchmark run's dir (`.bench_build/`). CMD's
+# own exit code is passed through.
 #
 # Hadoop's local file system forks `chmod` for every file it creates
 # when libhadoop is not loaded, and `FileContext.rename` forks
@@ -48,24 +52,29 @@ lines = [ln.rstrip("\n") for ln in open(sys.argv[1]) if ln.strip()]
 by_cmd = collections.Counter()
 by_dir = collections.Counter()
 by_pattern = collections.Counter()
+program = 0
 for ln in lines:
     cmd, _, args = ln.partition(" ")
     by_cmd[cmd] += 1
     paths = [a for a in args.split() if "/" in a] or [args]
     path = paths[-1]
     kind = re.search(r"/(graft_[A-Za-z_]*?)(?:\d|/|$)", path)
-    by_dir[(cmd, kind.group(1) + "*" if kind else "(elsewhere)")] += 1
+    kind = kind.group(1) + "*" if kind else "ckpt/" if "/ckpt/" in path else "(elsewhere)"
+    by_dir[(cmd, kind)] += 1
+    if re.search(r"/(graft-scratch|\.bench_build)/", path):
+        program += 1
     pattern = re.sub(r"[0-9a-f]{8}(-?[0-9a-f]{4}){3}-?[0-9a-f]{12}", "#", path)
     by_pattern[(cmd, re.sub(r"\d+", "#", pattern))] += 1
 
 print(f"\n== spawn_audit: {len(lines)} spawns ==")
 for cmd, n in by_cmd.most_common():
     print(f"{n:8d}  {cmd}")
-print("\n== by scratch directory kind ==")
+print("\n== by program directory kind ==")
 for (cmd, kind), n in sorted(by_dir.items(), key=lambda kv: (-kv[1], kv[0])):
     print(f"{n:8d}  {cmd:<9} {kind}")
 print("\n== by path pattern (top 25) ==")
 for (cmd, pattern), n in by_pattern.most_common(25):
     print(f"{n:8d}  {cmd:<9} {pattern}")
+print(f"\nprogram_spawns={program}")
 EOF
 exit $rc
