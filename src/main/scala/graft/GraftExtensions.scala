@@ -9,7 +9,8 @@ import graft.functions.{DotF64, FnvHash64, Hamming64, Hilbert16, MinHashSigExpr,
   * expressions available to ANY session started with
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the supported
   * mechanism for shipping custom Catalyst code into a cluster without
-  * touching application code.
+  * touching application code. Its planner strategies and optimizer
+  * rules are [[Session.install]]'s lists.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -55,8 +56,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("hilbert16"),
       new ExpressionInfo(classOf[Hilbert16].getName, "hilbert16"),
       (exprs: Seq[Expression]) => Hilbert16.builder(exprs)))
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PushPartialTopK)
-    ext.injectOptimizerRule(_ => graft.plans.NanosRangePushdown)
+    Session.strategies.foreach(r => ext.injectPlannerStrategy(_ => r))
+    Session.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 import graft.io.NioLocalFileSystem
 import graft.plans.{AsOfJoinStrategy, NanosRangePushdown, PushPartialTopK, TopKPerKeyStrategy}
@@ -15,6 +18,14 @@ import graft.streaming.LocalCheckpointFileManager
   * on first use.
   */
 object Session {
+
+  /** The engine's planner strategies, in install order; [[install]] and
+    * [[GraftExtensions]] both add exactly these.
+    */
+  val strategies: Seq[SparkStrategy] = Seq(TopKPerKeyStrategy, AsOfJoinStrategy)
+
+  /** The engine's optimizer rules, in install order, shared the same way. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(PushPartialTopK, NanosRangePushdown)
 
   /** A `local[cpus]` session with the bench's settings and the engine's
     * rules installed.
@@ -67,9 +78,9 @@ object Session {
     */
   def install(spark: SparkSession): Unit = synchronized {
     val x = spark.experimental
-    Seq(TopKPerKeyStrategy, AsOfJoinStrategy).filterNot(x.extraStrategies.contains)
+    strategies.filterNot(x.extraStrategies.contains)
       .foreach(r => x.extraStrategies = x.extraStrategies :+ r)
-    Seq(PushPartialTopK, NanosRangePushdown).filterNot(x.extraOptimizations.contains)
+    optimizerRules.filterNot(x.extraOptimizations.contains)
       .foreach(r => x.extraOptimizations = x.extraOptimizations :+ r)
     Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",

@@ -30,10 +30,9 @@ object StreamQueries {
     * The session is [[graft.Session.install]]ed first, so the
     * checkpoint's offset log, commit log, file-source log and state
     * store go through [[LocalCheckpointFileManager]] and start no
-    * process per file. The drain scopes no setting itself; a caller
-    * that sizes its state with [[withStatePartitions]] scopes the
-    * shuffle-partition count around its drain, so such drains in one
-    * session still run one at a time.
+    * process per file. The drain scopes no setting itself: a registered
+    * query's state sizing is the registry's scope ([[queries]]) around
+    * the whole query, not something a caller wraps around its drain.
     */
   private[streaming] def drain(df: DataFrame, checkpoint: String = ckpt())(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
@@ -80,20 +79,43 @@ object StreamQueries {
     })
   }
 
-  /** Run `body` (which must START its streaming query synchronously —
-    * every caller awaits termination inside) with the shuffle-partition
-    * count sized to the query's STATE volume rather than the session's
-    * batch default: a stateful micro-batch commits one state-store
-    * delta per shuffle partition per trigger, so at contract-fixture
-    * state volume (≤ a few thousand keys) 32 partitions is pure
-    * per-trigger overhead. At production keyspace this knob goes UP —
-    * it is per-query state sizing either way, the same sizing the
-    * stream-stream join documented in round 2.
+  /** `path` staged as `parts` files ([[stageAsDirParts]]), or as
+    * `parts` identical copies of the whole table when `copies` is set
+    * ([[stageAsDirCopies]]), read back as a file stream with the staged
+    * files' schema, one file per trigger: the source of every registered
+    * streaming query.
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private def stagedStream(s: SparkSession, path: String, parts: Int,
+      copies: Boolean = false): DataFrame = {
+    val dir =
+      if (copies) stageAsDirCopies(s, path, parts) else stageAsDirParts(s, path, parts)
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+  }
+
+  /** Open shuffle-partition scopes per session: (depth, the value from
+    * before the outermost scope began).
+    */
+  private val stateScopes =
+    scala.collection.mutable.HashMap.empty[SparkSession, (Int, String)]
+
+  /** Run `body` with the session's shuffle-partition count at `n`.
+    * Scopes that overlap on one session (queries run from several
+    * threads) share the setting, and the last one to end restores the
+    * value from before the first one began.
+    */
+  private[streaming] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    stateScopes.synchronized {
+      val (depth, before) = stateScopes.getOrElse(s, (0, s.conf.get(key)))
+      stateScopes(s) = (depth + 1, before)
+      s.conf.set(key, n.toString)
+    }
+    try body finally stateScopes.synchronized {
+      val (depth, before) = stateScopes(s)
+      if (depth > 1) stateScopes(s) = (depth - 1, before)
+      else { stateScopes -= s; s.conf.set(key, before) }
+    }
   }
 
   /** `obs`'s metrics. They arrive on the listener bus after the action
@@ -163,36 +185,26 @@ object StreamQueries {
     * changed, with their cumulative counts from the state store); the
     * delta-log reconstruction must equal the batch word count's answer.
     */
-  def streamWordCount(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 2)
-      val schema = s.read.parquet(src).schema
-      val lines = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select(col("text").as("value"))
-      runDeltaLog(Streams.wordCount(lines), "update", Seq("word"))
-        .withColumnRenamed("count", "cnt")
-    }
+  def streamWordCount(s: SparkSession, dir: String): DataFrame = {
+    val lines = stagedStream(s, s"$dir/documents.parquet", 2)
+      .select(col("text").as("value"))
+    runDeltaLog(Streams.wordCount(lines), "update", Seq("word"))
+      .withColumnRenamed("count", "cnt")
+  }
 
   /** Streaming interval count over `events` — the A5 query shape on the
     * incremental engine, final state compared against the batch oracle.
     */
-  def streamIntervalCount(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      val path = s"$dir/events.parquet"
-      val src = stageAsDirParts(s, path, 2)
-      val schema = s.read.parquet(src).schema
-      val lo = 1704844800000000000L // 2024-01-10T00:00:00Z in epoch nanos
-      val hi = 1705708800000000000L // 2024-01-20T00:00:00Z
-      val ev = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .filter(col("ts") >= lo && col("ts") < hi)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      runDeltaLog(ev, "update", Seq("event_type"))
-    }
+  def streamIntervalCount(s: SparkSession, dir: String): DataFrame = {
+    val lo = 1704844800000000000L // 2024-01-10T00:00:00Z in epoch nanos
+    val hi = 1705708800000000000L // 2024-01-20T00:00:00Z
+    val ev = stagedStream(s, s"$dir/events.parquet", 2)
+      .filter(col("ts") >= lo && col("ts") < hi)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+    runDeltaLog(ev, "update", Seq("event_type"))
+  }
 
   /** Per-user sessionization state: sessions fully closed by the
     * watermark (counts only) plus the still-open session intervals
@@ -301,10 +313,8 @@ object StreamQueries {
     * still equals the batch lag-gap sessionization oracle.
     */
   def streamSessionStats(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      sessionStatsStream(s, src, maxFilesPerTrigger = Some(1))
-    }
+    sessionStatsStream(s, stageAsDirParts(s, s"$dir/events.parquet", 4),
+      maxFilesPerTrigger = Some(1))
 
   /** Stream-stream interval join as a driver-contract query: purchases
     * join every click by the same user within the preceding hour, both
@@ -315,22 +325,18 @@ object StreamQueries {
     * (DuckDB reads the nanos parquet column truncated to µs), so the
     * interval comparisons are exact integer µs comparisons.
     */
-  def streamClickAttribution(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val path = s"$dir/events.parquet"
-    val staged = stageAsDirParts(s, path, 1)
-    val schema = s.read.parquet(staged).schema
-    // a stream-stream join materializes FOUR state stores per shuffle
-    // partition per trigger — the sizing helper's worst case
-    withStatePartitions(s, 8) {
-      streamClickAttributionInner(s, staged, schema)
-    }
-  }
+  def streamClickAttribution(s: SparkSession, dir: String): DataFrame =
+    clickAttribution(s, dir, "inner")
 
-  private def streamClickAttributionInner(s: SparkSession, staged: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  /** Purchases joined to the same user's clicks in the preceding hour,
+    * as a `joinType` stream-stream join with both sides watermarked at
+    * 2 hours, drained append-mode. Each side is its own stream over the
+    * one-file staged events.
+    */
+  private def clickAttribution(s: SparkSession, dir: String,
+      joinType: String): DataFrame = {
     import s.implicits._
-    def src(): DataFrame = s.readStream.schema(schema).parquet(staged)
+    def src(): DataFrame = stagedStream(s, s"$dir/events.parquet", 1)
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("timestamp_micros(ts div 1000)").as("tsu"))
     val p = src().where($"event_type" === "purchase")
@@ -343,7 +349,8 @@ object StreamQueries {
       .withWatermark("c_ts", "2 hours")
     val joined = p.join(c,
       expr("""p_user = c_user AND
-             |c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR""".stripMargin))
+             |c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR""".stripMargin),
+      joinType)
       .select($"purchase_id", $"click_id")
     // append mode: each trigger's newly-joinable pairs land in the delta
     // log once; the final view is the plain union of batches
@@ -369,31 +376,8 @@ object StreamQueries {
     * the contract a downstream consumer of an outer streaming join must
     * understand at any scale.
     */
-  def streamAttributionOuter(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val path = s"$dir/events.parquet"
-    val staged = stageAsDirParts(s, path, 1)
-    val schema = s.read.parquet(staged).schema
-    withStatePartitions(s, 8) {
-      def src(): DataFrame = s.readStream.schema(schema).parquet(staged)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("timestamp_micros(ts div 1000)").as("tsu"))
-      val p = src().where($"event_type" === "purchase")
-        .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
-          $"tsu".as("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-      val c = src().where($"event_type" === "click")
-        .select($"event_id".as("click_id"), $"user_id".as("c_user"),
-          $"tsu".as("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-      val joined = p.join(c,
-        expr("""p_user = c_user AND
-               |c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR""".stripMargin),
-        "left_outer")
-        .select($"purchase_id", $"click_id")
-      runDeltaLog(joined, "append", Nil)
-    }
-  }
+  def streamAttributionOuter(s: SparkSession, dir: String): DataFrame =
+    clickAttribution(s, dir, "left_outer")
 
   /** The oracle's watermark term restates Spark's exactly: each side's
     * watermark tracks the max event time OF THAT FILTERED SIDE (the
@@ -427,22 +411,17 @@ object StreamQueries {
     * trigger split. Extends the lambda-convergence claim to the dedup
     * family.
     */
-  def streamDedupExact(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 2)
-      val schema = s.read.parquet(src).schema
-      val docs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select(col("doc_id"),
-          trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
-        .groupBy(graft.functions.FnvHash64.fnv_hash64(col("norm")).as("text_hash"),
-          col("norm"))
-        .agg(min(col("doc_id")).as("kept_doc_id"),
-          count(lit(1)).as("n_copies"))
-      runDeltaLog(docs, "update", Seq("text_hash", "norm"))
-        .select("kept_doc_id", "n_copies")
-    }
+  def streamDedupExact(s: SparkSession, dir: String): DataFrame = {
+    val docs = stagedStream(s, s"$dir/documents.parquet", 2)
+      .select(col("doc_id"),
+        trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
+      .groupBy(graft.functions.FnvHash64.fnv_hash64(col("norm")).as("text_hash"),
+        col("norm"))
+      .agg(min(col("doc_id")).as("kept_doc_id"),
+        count(lit(1)).as("n_copies"))
+    runDeltaLog(docs, "update", Seq("text_hash", "norm"))
+      .select("kept_doc_id", "n_copies")
+  }
 
   /** Streaming hourly windowed counts — the time-window aggregation on
     * the incremental engine (tumbling `window()` + watermark). Update
@@ -453,15 +432,11 @@ object StreamQueries {
     * yields the final per-window counts — the batch `ev_hourly_counts`
     * oracle.
     */
-  def streamHourlyCounts(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
+  def streamHourlyCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val src = stageAsDirParts(s, s"$dir/events.parquet", 2)
-    val schema = s.read.parquet(src).schema
     val lo = 1704412800000000000L // 2024-01-05T00:00:00Z epoch nanos
     val hi = 1704499200000000000L // 2024-01-06T00:00:00Z
-    val ev = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val ev = stagedStream(s, s"$dir/events.parquet", 2)
       .filter(col("ts") >= lo && col("ts") < hi)
       .select(col("event_type"),
         expr("timestamp_micros(ts div 1000)").as("ts_t"))
@@ -472,7 +447,7 @@ object StreamQueries {
       .select(date_format($"window.start", "yyyy-MM-dd HH:mm").as("hour"),
         $"event_type", $"cnt")
     runDeltaLog(ev, "update", Seq("hour", "event_type"))
-    }
+  }
 
   /** Incremental materialized-view maintenance — the lambda serving
     * layer as a contract query. The events stream is staged as FOUR
@@ -484,18 +459,14 @@ object StreamQueries {
     * same rows). The view is reconstructed as latest-batch-wins per key
     * and must equal the batch aggregate — the oracle.
     */
-  def streamMvCounts(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("cnt"))
-      runDeltaLog(agg, "update", Seq("event_type"))
-        .select($"event_type", $"cnt")
-    }
+  def streamMvCounts(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val agg = stagedStream(s, s"$dir/events.parquet", 4)
+      .groupBy($"event_type")
+      .agg(count(lit(1)).as("cnt"))
+    runDeltaLog(agg, "update", Seq("event_type"))
+      .select($"event_type", $"cnt")
+  }
 
   val streamMvCountsSql: String =
     """SELECT event_type, count(*) AS cnt
@@ -513,26 +484,22 @@ object StreamQueries {
     * for an approximate, mergeable state for the first time (counts
     * and sessions prove it for exact state).
     */
-  def streamHllUsers(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val (idx, mv) = graft.operators.Sketches.hllRowSignals($"user_id")
-      val regs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"event_type", idx.as("idx"), mv.as("mv"))
-        .groupBy($"event_type", $"idx")
-        .agg(max($"mv").as("m_val"))
-      val table = runDeltaLog(regs, "update", Seq("event_type", "idx"))
-        .select($"event_type", $"idx", $"m_val")
-      val est = graft.operators.Sketches.hllFinalize(table, Seq("event_type"))
-      val exact = graft.Tables.events(s, dir)
-        .groupBy($"event_type")
-        .agg(countDistinct($"user_id").as("exact_users"))
-      exact.join(est, "event_type")
-        .select($"event_type", $"exact_users", $"hll_est", $"n_regs")
-    }
+  def streamHllUsers(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val (idx, mv) = graft.operators.Sketches.hllRowSignals($"user_id")
+    val regs = stagedStream(s, s"$dir/events.parquet", 4)
+      .select($"event_type", idx.as("idx"), mv.as("mv"))
+      .groupBy($"event_type", $"idx")
+      .agg(max($"mv").as("m_val"))
+    val table = runDeltaLog(regs, "update", Seq("event_type", "idx"))
+      .select($"event_type", $"idx", $"m_val")
+    val est = graft.operators.Sketches.hllFinalize(table, Seq("event_type"))
+    val exact = graft.Tables.events(s, dir)
+      .groupBy($"event_type")
+      .agg(countDistinct($"user_id").as("exact_users"))
+    exact.join(est, "event_type")
+      .select($"event_type", $"exact_users", $"hll_est", $"n_regs")
+  }
 
   /** Streaming LSH signature ingest: the vector-pipeline shape where
     * embeddings stream in and their multi-table hyperplane signatures
@@ -547,10 +514,7 @@ object StreamQueries {
   def streamEmbeddingSigs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (npt, planes) = graft.operators.Similarity.ndParams(s, dir)
-    val src = stageAsDirParts(s, s"$dir/embeddings.parquet", 2)
-    val schema = s.read.parquet(src).schema
-    val ev = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val ev = stagedStream(s, s"$dir/embeddings.parquet", 2)
       .select($"vec_id",
         posexplode(graft.functions.HyperplaneSigs.sigs(
           $"embedding", planes, graft.operators.Similarity.NdTables, npt))
@@ -573,8 +537,6 @@ object StreamQueries {
   def streamKmeansAssign(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cents = graft.operators.KMeans.trainedCentroids(s, dir)
-    val src = stageAsDirParts(s, s"$dir/embeddings.parquet", 2)
-    val schema = s.read.parquet(src).schema
     val scored = cents.map { case (k, c) =>
       struct(
         aggregate(
@@ -583,8 +545,7 @@ object StreamQueries {
           lit(0.0), (acc, x) => acc + x).as("d"),
         lit(k).as("k"))
     }
-    val counts = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val counts = stagedStream(s, s"$dir/embeddings.parquet", 2)
       .select(array_min(array(scored: _*)).getField("k").as("cluster"))
       .groupBy($"cluster")
       .agg(count(lit(1)).as("n_vecs"))
@@ -608,37 +569,33 @@ object StreamQueries {
     * inverted-list length histogram an index server needs for probe
     * planning.
     */
-  def streamIvfPqIngest(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val Sim = graft.operators.Similarity
-      val icents = Sim.ivfCentroids(s, dir)
-      val cbs = Sim.pqCodebooks(s, dir)
-      val src = stageAsDirParts(s, s"$dir/embeddings.parquet", 2)
-      val schema = s.read.parquet(src).schema
-      val scored = icents.zipWithIndex.map { case (c, k) =>
-        struct(
-          aggregate(
-            zip_with($"embedding", typedlit(c.toSeq),
-              (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-            lit(0.0), (acc, x) => acc + x).as("d"),
-          lit(k).as("k"))
-      }
-      val checksum = aggregate(
-        zip_with(
-          graft.functions.PqEncode.pq_encode($"embedding", cbs),
-          typedlit(Sim.PqChecksumMults.toSeq),
-          (c, m) => c.cast("long") * m),
-        lit(0L), (a, x) => a + x)
-      val cells = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select(array_min(array(scored: _*)).getField("k").as("cell"),
-          checksum.as("csum"))
-        .groupBy($"cell")
-        .agg(count(lit(1)).as("n_vecs"), sum($"csum").as("code_checksum"))
-      runDeltaLog(cells, "update", Seq("cell"))
-        .select($"cell", $"n_vecs", $"code_checksum")
+  def streamIvfPqIngest(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val Sim = graft.operators.Similarity
+    val icents = Sim.ivfCentroids(s, dir)
+    val cbs = Sim.pqCodebooks(s, dir)
+    val scored = icents.zipWithIndex.map { case (c, k) =>
+      struct(
+        aggregate(
+          zip_with($"embedding", typedlit(c.toSeq),
+            (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
+          lit(0.0), (acc, x) => acc + x).as("d"),
+        lit(k).as("k"))
     }
+    val checksum = aggregate(
+      zip_with(
+        graft.functions.PqEncode.pq_encode($"embedding", cbs),
+        typedlit(Sim.PqChecksumMults.toSeq),
+        (c, m) => c.cast("long") * m),
+      lit(0L), (a, x) => a + x)
+    val cells = stagedStream(s, s"$dir/embeddings.parquet", 2)
+      .select(array_min(array(scored: _*)).getField("k").as("cell"),
+        checksum.as("csum"))
+      .groupBy($"cell")
+      .agg(count(lit(1)).as("n_vecs"), sum($"csum").as("code_checksum"))
+    runDeltaLog(cells, "update", Seq("cell"))
+      .select($"cell", $"n_vecs", $"code_checksum")
+  }
 
   /** Per-bucket LSH state: the (doc_id, signature) members seen so far
     * in one band bucket. Bounded by construction — LSH band keys spread
@@ -652,6 +609,13 @@ object StreamQueries {
   case class NearDupState(members: List[(Long, Array[Long])])
 
   val NearDupMaxBucket = 4096
+
+  /** Estimated Jaccard of two MinHash signatures: the share of equal slots. */
+  private def estJaccard(a: Array[Long], b: Array[Long]): Double = {
+    var m = 0; var i = 0
+    while (i < a.length) { if (a(i) == b(i)) m += 1; i += 1 }
+    m.toDouble / a.length
+  }
 
   /** Streaming MinHash-LSH near-dup dedup — the keep/drop decision made
     * AT INGEST, across triggers, with per-bucket bounded state:
@@ -671,63 +635,53 @@ object StreamQueries {
     * shingles, same 64 permutations, same banding, same verification
     * threshold, which is what the DuckDB oracle restates.
     */
-  def streamNearDup(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 4)
-      val schema = s.read.parquet(src).schema
-      val bands = graft.functions.Hashing.Bands
-      val rpb = graft.functions.Hashing.RowsPerBand
-      val sigs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id",
-          graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
-        .where($"sig".isNotNull)
-      // band index folded into the key so cross-band value collisions
-      // can't alias (the batch join keys on (band, bucket) identically)
-      val bandKeys = array((0 until bands).map { b =>
-        concat_ws(":", lit(b.toString) +:
-          (1 to rpb).map(r => element_at($"sig", b * rpb + r).cast("string")): _*)
-      }: _*)
-      val keyed = sigs
-        .select($"doc_id", $"sig", explode(bandKeys).as("bkey"))
-        .select($"bkey", $"doc_id", $"sig")
-        .as[(String, Long, Array[Long])]
-      def estJaccard(a: Array[Long], b: Array[Long]): Double = {
-        var m = 0; var i = 0
-        while (i < a.length) { if (a(i) == b(i)) m += 1; i += 1 }
-        m.toDouble / a.length
-      }
-      val drops = keyed.groupByKey(_._1)
-        .flatMapGroupsWithState[NearDupState, (Long, Long, Double)](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (_: String, rows: Iterator[(String, Long, Array[Long])],
-              state: GroupState[NearDupState]) =>
-            var members = state.getOption.map(_.members).getOrElse(Nil)
-            val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Double)]
-            rows.foreach { case (_, docId, sig) =>
-              members.foreach { case (mId, mSig) =>
-                if (mId != docId) {
-                  val e = estJaccard(sig, mSig)
-                  if (e >= 0.5)
-                    out += ((math.max(docId, mId), math.min(docId, mId), e))
-                }
+  def streamNearDup(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val bands = graft.functions.Hashing.Bands
+    val rpb = graft.functions.Hashing.RowsPerBand
+    val sigs = stagedStream(s, s"$dir/documents.parquet", 4)
+      .select($"doc_id",
+        graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
+      .where($"sig".isNotNull)
+    // band index folded into the key so cross-band value collisions
+    // can't alias (the batch join keys on (band, bucket) identically)
+    val bandKeys = array((0 until bands).map { b =>
+      concat_ws(":", lit(b.toString) +:
+        (1 to rpb).map(r => element_at($"sig", b * rpb + r).cast("string")): _*)
+    }: _*)
+    val keyed = sigs
+      .select($"doc_id", $"sig", explode(bandKeys).as("bkey"))
+      .select($"bkey", $"doc_id", $"sig")
+      .as[(String, Long, Array[Long])]
+    val drops = keyed.groupByKey(_._1)
+      .flatMapGroupsWithState[NearDupState, (Long, Long, Double)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, rows: Iterator[(String, Long, Array[Long])],
+            state: GroupState[NearDupState]) =>
+          var members = state.getOption.map(_.members).getOrElse(Nil)
+          val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Double)]
+          rows.foreach { case (_, docId, sig) =>
+            members.foreach { case (mId, mSig) =>
+              if (mId != docId) {
+                val e = estJaccard(sig, mSig)
+                if (e >= 0.5)
+                  out += ((math.max(docId, mId), math.min(docId, mId), e))
               }
-              if (members.size < NearDupMaxBucket)
-                members = (docId, sig) :: members
             }
-            state.update(NearDupState(members))
-            out.iterator
-        }
-        .toDF("victim_doc_id", "witness_doc_id", "est_jaccard")
-      val victims = runDeltaLog(drops, "append", Nil)
-        .select($"victim_doc_id").distinct()
-      graft.Tables.documents(s, dir).select($"doc_id")
-        .join(victims, $"doc_id" === $"victim_doc_id", "left_anti")
-        .select($"doc_id".as("kept_doc_id"))
-    }
+            if (members.size < NearDupMaxBucket)
+              members = (docId, sig) :: members
+          }
+          state.update(NearDupState(members))
+          out.iterator
+      }
+      .toDF("victim_doc_id", "witness_doc_id", "est_jaccard")
+    val victims = runDeltaLog(drops, "append", Nil)
+      .select($"victim_doc_id").distinct()
+    graft.Tables.documents(s, dir).select($"doc_id")
+      .join(victims, $"doc_id" === $"victim_doc_id", "left_anti")
+      .select($"doc_id".as("kept_doc_id"))
+  }
 
   /** Stage a table as N IDENTICAL file copies — a duplicated feed (the
     * at-least-once upstream a streaming dedup exists to absorb). Keyed
@@ -761,21 +715,17 @@ object StreamQueries {
     * why enrichment joins should be stream-static, not stream-stream,
     * whenever the dimension is slowly-changing.
     */
-  def streamStaticEnrich(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 2)
-      val schema = s.read.parquet(src).schema
-      val profile = graft.Tables.events(s, dir)
-        .groupBy($"user_id")
-        .agg((count(lit(1)) >= 30).as("heavy"))
-      val ev = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .join(profile, Seq("user_id"))
-        .groupBy($"event_type", $"heavy")
-        .agg(count(lit(1)).as("cnt"))
-      runDeltaLog(ev, "update", Seq("event_type", "heavy"))
-    }
+  def streamStaticEnrich(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val profile = graft.Tables.events(s, dir)
+      .groupBy($"user_id")
+      .agg((count(lit(1)) >= 30).as("heavy"))
+    val ev = stagedStream(s, s"$dir/events.parquet", 2)
+      .join(profile, Seq("user_id"))
+      .groupBy($"event_type", $"heavy")
+      .agg(count(lit(1)).as("cnt"))
+    runDeltaLog(ev, "update", Seq("event_type", "heavy"))
+  }
 
   val streamStaticEnrichSql: String =
     """WITH prof AS (
@@ -797,19 +747,15 @@ object StreamQueries {
     * bounded-state semantics coincide with exact global dedup and the
     * batch table is the oracle.
     */
-  def streamDropdupWatermark(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirCopies(s, s"$dir/events.parquet", 2)
-      val schema = s.read.parquet(src).schema
-      val deduped = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"event_id", $"event_type",
-          expr("timestamp_micros(ts div 1000)").as("ts_t"))
-        .withWatermark("ts_t", "365 days")
-        .dropDuplicatesWithinWatermark("event_id")
-      runDeltaLog(deduped.select($"event_id", $"event_type"), "append", Nil)
-    }
+  def streamDropdupWatermark(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val deduped = stagedStream(s, s"$dir/events.parquet", 2, copies = true)
+      .select($"event_id", $"event_type",
+        expr("timestamp_micros(ts div 1000)").as("ts_t"))
+      .withWatermark("ts_t", "365 days")
+      .dropDuplicatesWithinWatermark("event_id")
+    runDeltaLog(deduped.select($"event_id", $"event_type"), "append", Nil)
+  }
 
   val streamDropdupWatermarkSql: String =
     "SELECT event_id, event_type FROM events"
@@ -828,19 +774,15 @@ object StreamQueries {
     * which is exactly the lambda-serving split `stream_mv_counts`
     * established.
     */
-  def streamTopkUsers(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("cnt"))
-      runDeltaLog(agg, "update", Seq("user_id"))
-        .orderBy($"cnt".desc, $"user_id".asc)
-        .limit(10)
-    }
+  def streamTopkUsers(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val agg = stagedStream(s, s"$dir/events.parquet", 4)
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("cnt"))
+    runDeltaLog(agg, "update", Seq("user_id"))
+      .orderBy($"cnt".desc, $"user_id".asc)
+      .limit(10)
+  }
 
   val streamTopkUsersSql: String =
     """SELECT user_id, cnt FROM (
@@ -893,34 +835,30 @@ object StreamQueries {
     * driver fixture every minute is in-horizon, so no timeout is set
     * and convergence is exact).
     */
-  def streamBotFlags(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val ev = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("user_id", "ts div 60000000000 AS minute")
-        .as[(Long, Long)]
-      val flags = ev.groupByKey(_._1)
-        .flatMapGroupsWithState[Map[Long, Long], (Long, Long, Long, Long)](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (user: Long, it: Iterator[(Long, Long)],
-              state: GroupState[Map[Long, Long]]) =>
-            val updated = it.foldLeft(state.getOption.getOrElse(Map.empty[Long, Long])) {
-              case (m, (_, minute)) => m.updated(minute, m.getOrElse(minute, 0L) + 1L)
-            }
-            state.update(updated)
-            Iterator((user, updated.values.sum, updated.size.toLong,
-              updated.values.max))
-        }
-        .toDF("user_id", "n_events", "active_minutes", "max_per_min")
-        .selectExpr("user_id", "n_events", "active_minutes", "max_per_min",
-          "floor(CAST(n_events AS DOUBLE) / active_minutes * 1e6 + 0.5) / 1e6 AS mean_per_active_min",
-          s"max_per_min >= ${graft.operators.EventOps.BotBurstPerMin} AS is_bot")
-      runDeltaLog(flags, "update", Seq("user_id"))
-    }
+  def streamBotFlags(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val ev = stagedStream(s, s"$dir/events.parquet", 4)
+      .selectExpr("user_id", "ts div 60000000000 AS minute")
+      .as[(Long, Long)]
+    val flags = ev.groupByKey(_._1)
+      .flatMapGroupsWithState[Map[Long, Long], (Long, Long, Long, Long)](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (user: Long, it: Iterator[(Long, Long)],
+            state: GroupState[Map[Long, Long]]) =>
+          val updated = it.foldLeft(state.getOption.getOrElse(Map.empty[Long, Long])) {
+            case (m, (_, minute)) => m.updated(minute, m.getOrElse(minute, 0L) + 1L)
+          }
+          state.update(updated)
+          Iterator((user, updated.values.sum, updated.size.toLong,
+            updated.values.max))
+      }
+      .toDF("user_id", "n_events", "active_minutes", "max_per_min")
+      .selectExpr("user_id", "n_events", "active_minutes", "max_per_min",
+        "floor(CAST(n_events AS DOUBLE) / active_minutes * 1e6 + 0.5) / 1e6 AS mean_per_active_min",
+        s"max_per_min >= ${graft.operators.EventOps.BotBurstPerMin} AS is_bot")
+    runDeltaLog(flags, "update", Seq("user_id"))
+  }
 
   /** Streaming funnel — per-user stage progress (first view / click /
     * purchase nanos) maintained as an update-mode conditional-min
@@ -931,28 +869,24 @@ object StreamQueries {
     * derives in one pass. The final ordered-stage summary must equal
     * batch `ev_funnel` — the oracle IS that query's SQL. At production
     * keyspace the state is user-count-bounded (the funnel dashboard
-    * shape); `withStatePartitions` is the documented sizing knob.
+    * shape); the registry's state sizing ([[queries]]) is the knob.
     */
-  def streamFunnel(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val perUser = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .groupBy($"user_id")
-        .agg(
-          min(when($"event_type" === "view", $"ts")).as("t_view"),
-          min(when($"event_type" === "click", $"ts")).as("t_click"),
-          min(when($"event_type" === "purchase", $"ts")).as("t_purchase"))
-      runDeltaLog(perUser, "update", Seq("user_id"))
-        .agg(
-          count(lit(1)).as("n_users"),
-          count(when($"t_view".isNotNull, 1)).as("viewed"),
-          count(when($"t_view" < $"t_click", 1)).as("clicked_after_view"),
-          count(when($"t_view" < $"t_click" && $"t_click" < $"t_purchase", 1))
-            .as("purchased_after_funnel"))
-    }
+  def streamFunnel(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val perUser = stagedStream(s, s"$dir/events.parquet", 4)
+      .groupBy($"user_id")
+      .agg(
+        min(when($"event_type" === "view", $"ts")).as("t_view"),
+        min(when($"event_type" === "click", $"ts")).as("t_click"),
+        min(when($"event_type" === "purchase", $"ts")).as("t_purchase"))
+    runDeltaLog(perUser, "update", Seq("user_id"))
+      .agg(
+        count(lit(1)).as("n_users"),
+        count(when($"t_view".isNotNull, 1)).as("viewed"),
+        count(when($"t_view" < $"t_click", 1)).as("clicked_after_view"),
+        count(when($"t_view" < $"t_click" && $"t_click" < $"t_purchase", 1))
+          .as("purchased_after_funnel"))
+  }
 
   /** Streaming Count-Min heavy hitters — the counter-TABLE variant of
     * [[streamHllUsers]]'s mergeable-state claim: each micro-batch folds
@@ -963,25 +897,21 @@ object StreamQueries {
     * probe/min stage as the batch sketch and must equal it exactly —
     * the oracle IS the batch `sketch_cms_heavy` SQL.
     */
-  def streamCmsHeavy(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counters = graft.Tables.spread(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src), "doc_id")
-        .select(explode(split(lower($"text"), "\\s+")).as("tok"))
-        .where($"tok" =!= "")
-        .select($"tok",
-          explode(sequence(lit(0), lit(graft.operators.Sketches.CmsD - 1)))
-            .as("j"))
-        .select($"j", graft.operators.Sketches.cmsCell($"j", $"tok").as("cell"))
-        .groupBy($"j", $"cell")
-        .agg(count(lit(1)).as("cnt"))
-      val table = runDeltaLog(counters, "update", Seq("j", "cell"))
-        .select($"j", $"cell", $"cnt")
-      graft.operators.Sketches.cmsFinalize(s, dir, table)
-    }
+  def streamCmsHeavy(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val counters = graft.Tables.spread(stagedStream(s, s"$dir/documents.parquet", 4), "doc_id")
+      .select(explode(split(lower($"text"), "\\s+")).as("tok"))
+      .where($"tok" =!= "")
+      .select($"tok",
+        explode(sequence(lit(0), lit(graft.operators.Sketches.CmsD - 1)))
+          .as("j"))
+      .select($"j", graft.operators.Sketches.cmsCell($"j", $"tok").as("cell"))
+      .groupBy($"j", $"cell")
+      .agg(count(lit(1)).as("cnt"))
+    val table = runDeltaLog(counters, "update", Seq("j", "cell"))
+      .select($"j", $"cell", $"cnt")
+    graft.operators.Sketches.cmsFinalize(s, dir, table)
+  }
 
   /** Streaming dyadic range-count sketch — `sketch_dyadic_range`'s
     * counter table maintained AT INGEST: each micro-batch aggregates
@@ -1007,31 +937,27 @@ object StreamQueries {
     * not allowed in a streaming query, and the per-batch delta log is
     * the same replay-safe state the weighted-Jaccard engine documents.)
     */
-  def streamDyadicRange(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.types.{StructType, LongType}
-      val Sk = graft.operators.Sketches
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val cntLog = graft.TempDirs.scoped("graft_dyadic_cntlog")
-      val cntSchema = new StructType()
-        .add("j", LongType).add("level", LongType).add("slot", LongType)
-        .add("cnt", LongType).add("batch_id", LongType)
-      val perEvent = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr(s"ts DIV ${Sk.DyadicMinuteNs} AS b")
-      drain(perEvent)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
-        val bcnt = batch.groupBy(col("b")).agg(count(lit(1)).as("n"))
-        val delta = Sk.dyadicCounterRows(bcnt)
-          .groupBy(col("j"), col("level"), col("slot"))
-          .agg(sum(col("n")).as("cnt"))
-        appendDeltaBatch(delta, id, cntLog)
-      })
-      val table = s.read.schema(cntSchema).parquet(cntLog)
-        .groupBy($"j", $"level", $"slot").agg(sum($"cnt").as("cnt"))
-      Sk.dyadicFinalize(s, dir, table)
-    }
+  def streamDyadicRange(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.types.{StructType, LongType}
+    val Sk = graft.operators.Sketches
+    val cntLog = graft.TempDirs.scoped("graft_dyadic_cntlog")
+    val cntSchema = new StructType()
+      .add("j", LongType).add("level", LongType).add("slot", LongType)
+      .add("cnt", LongType).add("batch_id", LongType)
+    val perEvent = stagedStream(s, s"$dir/events.parquet", 4)
+      .selectExpr(s"ts DIV ${Sk.DyadicMinuteNs} AS b")
+    drain(perEvent)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
+      val bcnt = batch.groupBy(col("b")).agg(count(lit(1)).as("n"))
+      val delta = Sk.dyadicCounterRows(bcnt)
+        .groupBy(col("j"), col("level"), col("slot"))
+        .agg(sum(col("n")).as("cnt"))
+      appendDeltaBatch(delta, id, cntLog)
+    })
+    val table = s.read.schema(cntSchema).parquet(cntLog)
+      .groupBy($"j", $"level", $"slot").agg(sum($"cnt").as("cnt"))
+    Sk.dyadicFinalize(s, dir, table)
+  }
 
   /** Streaming incremental near-dup admission — the STREAMING form of
     * [[graft.operators.Dedup.dedupIncremental]], closing the
@@ -1063,96 +989,110 @@ object StreamQueries {
     * admission shape: per-snapshot cost |batch| × bucket occupancy,
     * never corpus × corpus.
     */
-  def streamDedupIncremental(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 4)
-      val schema = s.read.parquet(src).schema
-      val bands = graft.functions.Hashing.Bands
-      val rpb = graft.functions.Hashing.RowsPerBand
-      val k = graft.functions.Hashing.MinhashK
-      val m = graft.operators.Dedup.IncrModulus
-      val r = graft.operators.Dedup.IncrIncomingRes
-      def bandKeys(sig: org.apache.spark.sql.Column) =
-        array((0 until bands).map { b =>
-          concat_ws(":", lit(b.toString) +:
-            (1 to rpb).map(x => element_at(sig, b * rpb + x).cast("string")): _*)
-        }: _*)
-      val verified =
-        s"""CAST(size(filter(zip_with(sig, sig_old, (x, y) -> x = y),
-           | v -> v)) AS DOUBLE) / $k >= 0.5""".stripMargin
-      // static corpus side: signatures + band-bucket index, built once and
-      // CACHED — a stream-static join re-evaluates the static plan every
-      // micro-batch otherwise (at 100 TB this side is the materialized
-      // bucket-partitioned index table, not a recompute)
-      val corpusIdx = graft.Tables.documents(s, dir)
-        .where($"doc_id" % m < r)
-        .select($"doc_id".as("doc_old"),
-          graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig_old"))
-        .where($"sig_old".isNotNull)
-        .select($"doc_old", $"sig_old", explode(bandKeys($"sig_old")).as("bkey"))
-        .cache()
-      // arriving snapshot: row-local signatures, exploded to band keys
-      def incomingBuckets() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .where($"doc_id" % m === r)
-        .select($"doc_id",
-          graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
-        .where($"sig".isNotNull)
-        .select($"doc_id", $"sig", explode(bandKeys($"sig")).as("bkey"))
-      def estJaccard(a: Array[Long], b: Array[Long]): Double = {
-        var mt = 0; var i = 0
-        while (i < a.length) { if (a(i) == b(i)) mt += 1; i += 1 }
-        mt.toDouble / a.length
-      }
-      // both verdict branches union into ONE streaming query (one
-      // trigger sequence, one delta log) — the stateless corpus join and
-      // the stateful batch pairing read their own copy of the source
-      val corpusSide = incomingBuckets().join(corpusIdx, "bkey")
-        .where(expr(verified))
-        .select($"doc_id".as("doc_new"), lit("corpus").as("side"))
-      val batchSide = incomingBuckets().select($"bkey", $"doc_id", $"sig")
-        .as[(String, Long, Array[Long])]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState[NearDupState, (Long, Long)](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (_: String, rows: Iterator[(String, Long, Array[Long])],
-              state: GroupState[NearDupState]) =>
-            var members = state.getOption.map(_.members).getOrElse(Nil)
-            val out = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-            rows.foreach { case (_, docId, sig) =>
-              members.foreach { case (mId, mSig) =>
-                if (mId != docId && estJaccard(sig, mSig) >= 0.5)
-                  out += ((math.max(docId, mId), math.min(docId, mId)))
-              }
-              if (members.size < NearDupMaxBucket)
-                members = (docId, sig) :: members
+  def streamDedupIncremental(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val bands = graft.functions.Hashing.Bands
+    val rpb = graft.functions.Hashing.RowsPerBand
+    val k = graft.functions.Hashing.MinhashK
+    val m = graft.operators.Dedup.IncrModulus
+    val r = graft.operators.Dedup.IncrIncomingRes
+    def bandKeys(sig: org.apache.spark.sql.Column) =
+      array((0 until bands).map { b =>
+        concat_ws(":", lit(b.toString) +:
+          (1 to rpb).map(x => element_at(sig, b * rpb + x).cast("string")): _*)
+      }: _*)
+    val verified =
+      s"""CAST(size(filter(zip_with(sig, sig_old, (x, y) -> x = y),
+         | v -> v)) AS DOUBLE) / $k >= 0.5""".stripMargin
+    // static corpus side: signatures + band-bucket index, built once and
+    // CACHED — a stream-static join re-evaluates the static plan every
+    // micro-batch otherwise (at 100 TB this side is the materialized
+    // bucket-partitioned index table, not a recompute)
+    val corpusIdx = graft.Tables.documents(s, dir)
+      .where($"doc_id" % m < r)
+      .select($"doc_id".as("doc_old"),
+        graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig_old"))
+      .where($"sig_old".isNotNull)
+      .select($"doc_old", $"sig_old", explode(bandKeys($"sig_old")).as("bkey"))
+      .cache()
+    // arriving snapshot: row-local signatures, exploded to band keys
+    def incomingBuckets() = stagedStream(s, s"$dir/documents.parquet", 4)
+      .where($"doc_id" % m === r)
+      .select($"doc_id",
+        graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
+      .where($"sig".isNotNull)
+      .select($"doc_id", $"sig", explode(bandKeys($"sig")).as("bkey"))
+    // both verdict branches union into ONE streaming query (one
+    // trigger sequence, one delta log) — the stateless corpus join and
+    // the stateful batch pairing read their own copy of the source
+    val corpusSide = incomingBuckets().join(corpusIdx, "bkey")
+      .where(expr(verified))
+      .select($"doc_id".as("doc_new"), lit("corpus").as("side"))
+    val batchSide = incomingBuckets().select($"bkey", $"doc_id", $"sig")
+      .as[(String, Long, Array[Long])]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[NearDupState, (Long, Long)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, rows: Iterator[(String, Long, Array[Long])],
+            state: GroupState[NearDupState]) =>
+          var members = state.getOption.map(_.members).getOrElse(Nil)
+          val out = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
+          rows.foreach { case (_, docId, sig) =>
+            members.foreach { case (mId, mSig) =>
+              if (mId != docId && estJaccard(sig, mSig) >= 0.5)
+                out += ((math.max(docId, mId), math.min(docId, mId)))
             }
-            state.update(NearDupState(members))
-            out.iterator
-        }.toDF("doc_new", "witness")
-        .select($"doc_new", lit("batch").as("side"))
-      val log = runDeltaLog(corpusSide.union(batchSide), "append", Nil)
-      val dupC = log.where($"side" === "corpus").select($"doc_new")
-        .distinct().withColumn("dc", lit(true))
-      val dupB = log.where($"side" === "batch").select($"doc_new")
-        .distinct().withColumn("db", lit(true))
-      graft.Tables.documents(s, dir)
-        .where($"doc_id" % m === r)
-        .select($"doc_id",
-          graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
-        .where($"sig".isNotNull)
-        .select($"doc_id".as("doc_new"))
-        .join(dupC, Seq("doc_new"), "left")
-        .join(dupB, Seq("doc_new"), "left")
-        .select($"doc_new",
-          coalesce($"dc", lit(false)).as("dup_corpus"),
-          coalesce($"db", lit(false)).as("dup_batch"),
-          (!coalesce($"dc", lit(false)) && !coalesce($"db", lit(false)))
-            .as("keep"))
-    }
+            if (members.size < NearDupMaxBucket)
+              members = (docId, sig) :: members
+          }
+          state.update(NearDupState(members))
+          out.iterator
+      }.toDF("doc_new", "witness")
+      .select($"doc_new", lit("batch").as("side"))
+    val log = runDeltaLog(corpusSide.union(batchSide), "append", Nil)
+    val dupC = log.where($"side" === "corpus").select($"doc_new")
+      .distinct().withColumn("dc", lit(true))
+    val dupB = log.where($"side" === "batch").select($"doc_new")
+      .distinct().withColumn("db", lit(true))
+    graft.Tables.documents(s, dir)
+      .where($"doc_id" % m === r)
+      .select($"doc_id",
+        graft.functions.MinHashSigExpr.minhash_sig($"text").as("sig"))
+      .where($"sig".isNotNull)
+      .select($"doc_id".as("doc_new"))
+      .join(dupC, Seq("doc_new"), "left")
+      .join(dupB, Seq("doc_new"), "left")
+      .select($"doc_new",
+        coalesce($"dc", lit(false)).as("dup_corpus"),
+        coalesce($"db", lit(false)).as("dup_batch"),
+        (!coalesce($"dc", lit(false)) && !coalesce($"db", lit(false)))
+          .as("keep"))
+  }
+
+  /** Events' per-hour counts (`t` = hours since the epoch, `c`) kept
+    * as update-mode state and drained latest-per-hour: the sufficient
+    * state of the hourly time-series queries, which close over it with
+    * the same finalize as their batch twins.
+    */
+  private def hourlyCountState(s: SparkSession, dir: String): DataFrame = {
+    val counts = stagedStream(s, s"$dir/events.parquet", 4)
+      .selectExpr("ts div 3600000000000 AS t")
+      .groupBy(col("t")).agg(count(lit(1)).as("c"))
+    runDeltaLog(counts, "update", Seq("t"))
+  }
+
+  /** Events' per-(event_type, day) counts (`cnt`) kept as update-mode
+    * state and drained latest-per-key: the daily counterpart of
+    * [[hourlyCountState]].
+    */
+  private def dailyCountState(s: SparkSession, dir: String): DataFrame = {
+    val counts = stagedStream(s, s"$dir/events.parquet", 4)
+      .selectExpr("event_type",
+        "CAST(timestamp_micros(ts div 1000) AS DATE) AS day")
+      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("cnt"))
+    runDeltaLog(counts, "update", Seq("event_type", "day"))
+  }
 
   /** Streaming ACF — the hourly count state maintained at ingest
     * (update mode: each trigger re-emits only the hours it advanced;
@@ -1165,17 +1105,7 @@ object StreamQueries {
     * equal the batch pass. Oracle IS `ev_acf`'s SQL.
     */
   def streamAcf(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("ts div 3600000000000 AS t")
-        .groupBy($"t").agg(count(lit(1)).as("c"))
-      val state = runDeltaLog(counts, "update", Seq("t"))
-      graft.operators.TimeSeries.acfFromCounts(state)
-    }
+    graft.operators.TimeSeries.acfFromCounts(hourlyCountState(s, dir))
 
   /** Streaming Poisson burst monitor — the [[streamAcf]] shape applied
     * to the alerting statistic: update-mode hourly count state, drained
@@ -1187,17 +1117,7 @@ object StreamQueries {
     * contract checks its converged state.)
     */
   def streamPoissonBurst(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("ts div 3600000000000 AS t")
-        .groupBy($"t").agg(count(lit(1)).as("c"))
-      graft.operators.TimeSeries.poissonBurstFromCounts(
-        runDeltaLog(counts, "update", Seq("t")))
-    }
+    graft.operators.TimeSeries.poissonBurstFromCounts(hourlyCountState(s, dir))
 
   /** Streaming EWMA — the [[streamAcf]] shape applied to the smoothed
     * volume line every live dashboard draws: per-(type, day) counter
@@ -1207,20 +1127,11 @@ object StreamQueries {
     * incrementally and convolving at read time must equal the batch
     * sweep. Oracle IS `ev_ewma`'s SQL.
     */
-  def streamEwma(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("event_type",
-          "CAST(timestamp_micros(ts div 1000) AS DATE) AS day")
-        .groupBy($"event_type", $"day").agg(count(lit(1)).as("c"))
-      val state = runDeltaLog(counts, "update", Seq("event_type", "day"))
-        .select($"event_type", $"day", $"c".cast("decimal(8,0)").as("cnt"))
-      graft.operators.TimeSeries.ewmaFromCounts(state)
-    }
+  def streamEwma(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    graft.operators.TimeSeries.ewmaFromCounts(dailyCountState(s, dir)
+      .select($"event_type", $"day", $"cnt".cast("decimal(8,0)").as("cnt")))
+  }
 
   /** Streaming changepoint — the [[streamEwma]] state (per-(type, day)
     * counters in update mode) closed through the SHARED
@@ -1229,19 +1140,7 @@ object StreamQueries {
     * the batch detector. Oracle IS `ev_changepoint`'s SQL.
     */
   def streamChangepoint(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("event_type",
-          "CAST(timestamp_micros(ts div 1000) AS DATE) AS day")
-        .groupBy($"event_type", $"day").agg(count(lit(1)).as("c"))
-      val state = runDeltaLog(counts, "update", Seq("event_type", "day"))
-        .select($"event_type", $"day", $"c".as("cnt"))
-      graft.operators.TimeSeries.changepointFromCounts(state)
-    }
+    graft.operators.TimeSeries.changepointFromCounts(dailyCountState(s, dir))
 
   /** Streaming histogram-quantile sketch — the [[streamCmsHeavy]]
     * shape applied to order statistics: per-bucket counters (the
@@ -1255,26 +1154,22 @@ object StreamQueries {
     * centroid frame); the total N the estimate needs comes from the
     * shared 1-row stats frame at read time, never from driver state.
     */
-  def streamHistQuantiles(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val buckets = graft.operators.Sketches.HistBuckets
-      val src = stageAsDirParts(s, s"$dir/lineitem.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val bounds = graft.operators.Sketches.histStats(s, dir).head
-      val (lo, hi) = (bounds.getDouble(0), bounds.getDouble(1))
-      val width = (hi - lo) / buckets
-      val counters = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"l_extendedprice".cast("double").as("v"))
-        .select(least(floor(($"v" - lo) / width), lit(buckets - 1))
-          .cast("int").as("bucket"))
-        .groupBy($"bucket").agg(count(lit(1)).as("cnt"))
-      val state = runDeltaLog(counters, "update", Seq("bucket"))
-        .select($"bucket", $"cnt")
-      graft.operators.Sketches.histEstFromCounts(state,
-        graft.operators.Sketches.histStats(s, dir))
-    }
+  def streamHistQuantiles(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val buckets = graft.operators.Sketches.HistBuckets
+    val bounds = graft.operators.Sketches.histStats(s, dir).head
+    val (lo, hi) = (bounds.getDouble(0), bounds.getDouble(1))
+    val width = (hi - lo) / buckets
+    val counters = stagedStream(s, s"$dir/lineitem.parquet", 4)
+      .select($"l_extendedprice".cast("double").as("v"))
+      .select(least(floor(($"v" - lo) / width), lit(buckets - 1))
+        .cast("int").as("bucket"))
+      .groupBy($"bucket").agg(count(lit(1)).as("cnt"))
+    val state = runDeltaLog(counters, "update", Seq("bucket"))
+      .select($"bucket", $"cnt")
+    graft.operators.Sketches.histEstFromCounts(state,
+      graft.operators.Sketches.histStats(s, dir))
+  }
 
   /** Streaming PACF — the [[streamAcf]] state (update-mode hourly
     * counts) closed through acfFromCounts AND the shared
@@ -1283,18 +1178,7 @@ object StreamQueries {
     * computation equals the batch pass). Oracle IS `ev_pacf`'s SQL.
     */
   def streamPacf(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("ts div 3600000000000 AS t")
-        .groupBy($"t").agg(count(lit(1)).as("c"))
-      graft.operators.TimeSeries.pacfFromAcf(
-        graft.operators.TimeSeries.acfFromCounts(
-          runDeltaLog(counts, "update", Seq("t"))))
-    }
+    graft.operators.TimeSeries.pacfFromAcf(graft.operators.TimeSeries.acfFromCounts(hourlyCountState(s, dir)))
 
   /** Streaming AR forecast — the [[streamPacf]] shape carried to the
     * end of the Box–Jenkins chain: update-mode hourly-count state,
@@ -1305,17 +1189,7 @@ object StreamQueries {
     * SQL.
     */
   def streamArForecast(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("ts div 3600000000000 AS t")
-        .groupBy($"t").agg(count(lit(1)).as("c"))
-      graft.operators.TimeSeries.arForecastFromCounts(
-        runDeltaLog(counts, "update", Seq("t")))
-    }
+    graft.operators.TimeSeries.arForecastFromCounts(hourlyCountState(s, dir))
 
   /** Streaming PSI drift monitor — the monitor every production
     * feature pipeline keeps running, as incremental state: update-mode
@@ -1329,21 +1203,17 @@ object StreamQueries {
     * state must equal the batch `dq_value_drift` pass; oracle IS that
     * query's SQL.
     */
-  def streamValueDrift(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val D = graft.operators.DataQuality
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"ts".as("ts_ns"), least(lit(9L),
-          floor($"value" / D.DriftBinW).cast("long")).as("bin"))
-        .groupBy($"bin").agg(
-          sum(when($"ts_ns" < D.DriftSplitNs, 1L).otherwise(0L)).as("n_ref"),
-          sum(when($"ts_ns" >= D.DriftSplitNs, 1L).otherwise(0L)).as("n_cur"))
-      D.driftFromBinCounts(runDeltaLog(counts, "update", Seq("bin")))
-    }
+  def streamValueDrift(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val D = graft.operators.DataQuality
+    val counts = stagedStream(s, s"$dir/events.parquet", 4)
+      .select($"ts".as("ts_ns"), least(lit(9L),
+        floor($"value" / D.DriftBinW).cast("long")).as("bin"))
+      .groupBy($"bin").agg(
+        sum(when($"ts_ns" < D.DriftSplitNs, 1L).otherwise(0L)).as("n_ref"),
+        sum(when($"ts_ns" >= D.DriftSplitNs, 1L).otherwise(0L)).as("n_cur"))
+    D.driftFromBinCounts(runDeltaLog(counts, "update", Seq("bin")))
+  }
 
   /** Streaming temperature mix — the multilingual sampling weights
     * maintained as INCREMENTAL state over a growing corpus: update-mode
@@ -1355,20 +1225,16 @@ object StreamQueries {
     * equal the batch `curate_temperature_mix` pass; oracle IS that
     * query's SQL.
     */
-  def streamTemperatureMix(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 2)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("lang",
-          "size(filter(split(lower(text), '\\\\s+'), t -> t <> '')) AS n_toks")
-        .groupBy($"lang")
-        .agg(count(lit(1)).as("n_docs"), sum($"n_toks").as("n_tokens"))
-      graft.operators.Curation.temperatureMixFromCounts(
-        runDeltaLog(counts, "update", Seq("lang")))
-    }
+  def streamTemperatureMix(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val counts = stagedStream(s, s"$dir/documents.parquet", 2)
+      .selectExpr("lang",
+        "size(filter(split(lower(text), '\\\\s+'), t -> t <> '')) AS n_toks")
+      .groupBy($"lang")
+      .agg(count(lit(1)).as("n_docs"), sum($"n_toks").as("n_tokens"))
+    graft.operators.Curation.temperatureMixFromCounts(
+      runDeltaLog(counts, "update", Seq("lang")))
+  }
 
   /** Streaming CDC ingest — chunk-at-ingest, census-at-read: the
     * narrow chunking kernel (`Dedup.cdcChunkRows`) runs inside each
@@ -1379,17 +1245,13 @@ object StreamQueries {
     * log. Must equal the batch `dedup_cdc_chunks` pass; oracle IS that
     * query's SQL.
     */
-  def streamCdcChunks(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 2)
-      val schema = s.read.parquet(src).schema
-      val chunks = graft.operators.Dedup.cdcChunkRows(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .select(col("doc_id"), col("text")))
-      graft.operators.Dedup.cdcCensus(
-        runDeltaLog(chunks, "append", Seq.empty))
-    }
+  def streamCdcChunks(s: SparkSession, dir: String): DataFrame = {
+    val chunks = graft.operators.Dedup.cdcChunkRows(
+      stagedStream(s, s"$dir/documents.parquet", 2)
+        .select(col("doc_id"), col("text")))
+    graft.operators.Dedup.cdcCensus(
+      runDeltaLog(chunks, "append", Seq.empty))
+  }
 
   /** Streaming LTTB — the live-dashboard shape: update-mode hourly
     * count state drained latest-per-hour and closed through the SHARED
@@ -1398,17 +1260,7 @@ object StreamQueries {
     * pass; oracle IS that query's SQL.
     */
   def streamLttb(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .selectExpr("ts div 3600000000000 AS t")
-        .groupBy($"t").agg(count(lit(1)).as("c"))
-      graft.operators.TimeSeries.lttbFromCounts(
-        runDeltaLog(counts, "update", Seq("t")))
-    }
+    graft.operators.TimeSeries.lttbFromCounts(hourlyCountState(s, dir))
 
   /** Streaming MAD anomaly monitor — update-mode per-(type, day)
     * counters drained and closed through the SHARED
@@ -1417,18 +1269,39 @@ object StreamQueries {
     * that query's SQL.
     */
   def streamAnomalyMad(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/events.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"event_type",
-          to_date(timestamp_micros(expr("ts div 1000"))).as("day"))
-        .groupBy($"event_type", $"day").agg(count(lit(1)).as("cnt"))
-      graft.operators.TimeSeries.anomalyMadFromCounts(
-        runDeltaLog(counts, "update", Seq("event_type", "day")))
-    }
+    graft.operators.TimeSeries.anomalyMadFromCounts(dailyCountState(s, dir))
+
+  /** The (asset_id, shingle) keys of the documents matching `assets`,
+    * decoded per micro-batch by `shingles` and kept as cross-trigger
+    * update-mode state (arrival-order-insensitive: the streaming form of
+    * the batch path's per-asset DISTINCT), drained latest-per-key.
+    */
+  private def assetShingleState(s: SparkSession, dir: String, assets: String,
+      shingles: (Long, String) => Iterator[(Long, Long)]): DataFrame = {
+    import s.implicits._
+    val sh = stagedStream(s, s"$dir/documents.parquet", 4)
+      .where(assets)
+      .select($"doc_id", $"text")
+      // per-batch decode fan-out: one staged file per trigger = ONE
+      // scan task; hash-spread arrivals so the payload decode that
+      // follows runs on every core (Tables.spread, guide §2.5)
+      .transform(df => graft.Tables.spread(df, "doc_id"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) => shingles(id, text) })
+      .toDF("asset_id", "shingle")
+      .groupBy($"asset_id", $"shingle").agg(count(lit(1)).as("n_occ"))
+    runDeltaLog(sh, "update", Seq("asset_id", "shingle")).select("asset_id", "shingle")
+  }
+
+  /** Audio shingle state: WAV windows of every third document. */
+  private def audioShingleState(s: SparkSession, dir: String): DataFrame =
+    assetShingleState(s, dir, "doc_id % 3 = 1", (id, text) =>
+      graft.operators.Multimodal.audioShingleRows(id, graft.operators.Multimodal.audioAssetPayload(id, text)))
+
+  /** Video shingle state: AVI frame trigrams of every document. */
+  private def videoShingleState(s: SparkSession, dir: String): DataFrame =
+    assetShingleState(s, dir, "true", (id, text) =>
+      graft.operators.Multimodal.videoShingleRows(id, graft.operators.Multimodal.videoAssetPayload(id, text)))
 
   /** Streaming audio near-dup — `mm_audio_neardup` on the incremental
     * engine: audio assets arrive across triggers (same deterministic
@@ -1446,30 +1319,7 @@ object StreamQueries {
     * query's SQL.
     */
   def streamAudioNeardup(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 4)
-      val schema = s.read.parquet(src).schema
-      val sh = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .where("doc_id % 3 = 1")
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          graft.operators.Multimodal.audioShingleRows(id,
-            graft.operators.Multimodal.audioAssetPayload(id, text))
-        })
-        .toDF("asset_id", "shingle")
-        .groupBy($"asset_id", $"shingle").agg(count(lit(1)).as("n_occ"))
-      val keys = runDeltaLog(sh, "update", Seq("asset_id", "shingle"))
-      graft.operators.Multimodal.audioNeardupPairs(s,
-        keys.select("asset_id", "shingle"))
-    }
+    graft.operators.Multimodal.audioNeardupPairs(s, audioShingleState(s, dir))
 
   /** Per-trigger cost ledger for the incremental ExactSubstr engine
     * ([[substrSpanLogRun]]): (batch_id, new posting rows, accumulated
@@ -1567,8 +1417,6 @@ object StreamQueries {
   private def substrSpanLogRun(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{StructType, LongType}
-    val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-    val schema = s.read.parquet(src).schema
     // ONE kinded, bucketed delta log (round 12; was four separate logs
     // = four write actions per trigger): rows are tagged by `kind` and
     // partitioned (batch_id, kind, ghb) so each trigger commits every
@@ -1593,8 +1441,7 @@ object StreamQueries {
     // running sum (was an O(accumulated) count() action every trigger)
     var accRows = 0L
     val occ = graft.operators.Dedup.exactSubstrOcc(s,
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
+      stagedStream(s, s"$dir/documents.parquet", 4)
         .select($"doc_id", $"text"))
     drain(occ)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
       val t0 = System.nanoTime()
@@ -1708,9 +1555,7 @@ object StreamQueries {
     * answer under any trigger split; the oracle IS that query's SQL.
     */
   def streamExactSubstr(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      substrSpanLogRun(s, dir)
-    }
+    substrSpanLogRun(s, dir)
 
   /** Streaming duplicate-token measurement — `dedup_substr_savings`
     * at INGEST: the SAME incremental span engine as
@@ -1722,10 +1567,8 @@ object StreamQueries {
     * under any trigger split; the oracle IS that query's SQL.
     */
   def streamSubstrSavings(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      graft.operators.Dedup.substrSavingsFromSpans(s, dir,
-        substrSpanLogRun(s, dir))
-    }
+    graft.operators.Dedup.substrSavingsFromSpans(s, dir,
+      substrSpanLogRun(s, dir))
 
   /** Streaming audio containment — `mm_audio_containment` on the
     * incremental engine: the SAME cross-trigger per-(asset, shingle)
@@ -1738,30 +1581,7 @@ object StreamQueries {
     * IS that query's SQL.
     */
   def streamAudioContainment(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 4)
-      val schema = s.read.parquet(src).schema
-      val sh = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .where("doc_id % 3 = 1")
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          graft.operators.Multimodal.audioShingleRows(id,
-            graft.operators.Multimodal.audioAssetPayload(id, text))
-        })
-        .toDF("asset_id", "shingle")
-        .groupBy($"asset_id", $"shingle").agg(count(lit(1)).as("n_occ"))
-      val keys = runDeltaLog(sh, "update", Seq("asset_id", "shingle"))
-      graft.operators.Multimodal.audioContainmentPairs(s,
-        keys.select("asset_id", "shingle"))
-    }
+    graft.operators.Multimodal.audioContainmentPairs(s, audioShingleState(s, dir))
 
   /** Streaming image-in-video containment — `mm_image_in_video` on the
     * incremental engine, and the first CROSS-MODAL streaming state:
@@ -1776,42 +1596,38 @@ object StreamQueries {
     * equals the batch query under any trigger split; the oracle IS
     * that query's SQL.
     */
-  def streamImageInVideo(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val sigs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          val img: Iterator[(Int, Long, Long, Long)] =
-            if (id % 3 == 0)
-              graft.operators.Multimodal
-                .decodeBmp(graft.operators.Multimodal.imageAssetPayload(id, text))
-                .iterator.map { case (_, _, luma, _) => (0, id, 0L, luma) }
-            else Iterator.empty
-          val frames = graft.operators.Multimodal
-            .decodeAviFrames(graft.operators.Multimodal.videoAssetPayload(id, text))
-            .iterator.flatMap(_._4.map { case (fi, _, _, px) =>
-              (1, id, fi.toLong, px)
-            })
-          img ++ frames
-        })
-        .toDF("kind", "asset_id", "frame_idx", "sig")
-        .groupBy($"kind", $"asset_id", $"frame_idx").agg(max($"sig").as("sig"))
-      val keys = runDeltaLog(sigs, "update", Seq("kind", "asset_id", "frame_idx"))
-      graft.operators.Multimodal.imageInVideoPairs(
-        keys.where($"kind" === 0)
-          .selectExpr("asset_id AS image_id", "sig AS luma_sum"),
-        keys.where($"kind" === 1)
-          .selectExpr("asset_id AS video_id", "sig AS px_sum"))
-    }
+  def streamImageInVideo(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val sigs = stagedStream(s, s"$dir/documents.parquet", 4)
+      .select($"doc_id", $"text")
+      // per-batch decode fan-out: one staged file per trigger = ONE
+      // scan task; hash-spread arrivals so the payload decode that
+      // follows runs on every core (Tables.spread, guide §2.5)
+      .transform(df => graft.Tables.spread(df, "doc_id"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        val img: Iterator[(Int, Long, Long, Long)] =
+          if (id % 3 == 0)
+            graft.operators.Multimodal
+              .decodeBmp(graft.operators.Multimodal.imageAssetPayload(id, text))
+              .iterator.map { case (_, _, luma, _) => (0, id, 0L, luma) }
+          else Iterator.empty
+        val frames = graft.operators.Multimodal
+          .decodeAviFrames(graft.operators.Multimodal.videoAssetPayload(id, text))
+          .iterator.flatMap(_._4.map { case (fi, _, _, px) =>
+            (1, id, fi.toLong, px)
+          })
+        img ++ frames
+      })
+      .toDF("kind", "asset_id", "frame_idx", "sig")
+      .groupBy($"kind", $"asset_id", $"frame_idx").agg(max($"sig").as("sig"))
+    val keys = runDeltaLog(sigs, "update", Seq("kind", "asset_id", "frame_idx"))
+    graft.operators.Multimodal.imageInVideoPairs(
+      keys.where($"kind" === 0)
+        .selectExpr("asset_id AS image_id", "sig AS luma_sum"),
+      keys.where($"kind" === 1)
+        .selectExpr("asset_id AS video_id", "sig AS px_sum"))
+  }
 
   /** Streaming video containment — the video twin of
     * [[streamAudioContainment]]: the cross-trigger (asset, shingle)
@@ -1820,28 +1636,7 @@ object StreamQueries {
     * under any trigger split; the oracle IS that query's SQL.
     */
   def streamVideoContainment(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val sh = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          graft.operators.Multimodal.videoShingleRows(id,
-            graft.operators.Multimodal.videoAssetPayload(id, text))
-        })
-        .toDF("asset_id", "shingle")
-        .groupBy($"asset_id", $"shingle").agg(count(lit(1)).as("n_occ"))
-      val keys = runDeltaLog(sh, "update", Seq("asset_id", "shingle"))
-      graft.operators.Multimodal.videoContainmentPairs(s,
-        keys.select("asset_id", "shingle"))
-    }
+    graft.operators.Multimodal.videoContainmentPairs(s, videoShingleState(s, dir))
 
   /** Streaming video near-dup — `mm_video_neardup` on the incremental
     * engine, identical contract shape to [[streamAudioNeardup]]: AVI
@@ -1853,29 +1648,7 @@ object StreamQueries {
     * split; the oracle IS that query's SQL.
     */
   def streamVideoNeardup(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val path = s"$dir/documents.parquet"
-      val src = stageAsDirParts(s, path, 4)
-      val schema = s.read.parquet(src).schema
-      val sh = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          graft.operators.Multimodal.videoShingleRows(id,
-            graft.operators.Multimodal.videoAssetPayload(id, text))
-        })
-        .toDF("asset_id", "shingle")
-        .groupBy($"asset_id", $"shingle").agg(count(lit(1)).as("n_occ"))
-      val keys = runDeltaLog(sh, "update", Seq("asset_id", "shingle"))
-      graft.operators.Multimodal.videoNeardupPairs(s,
-        keys.select("asset_id", "shingle"))
-    }
+    graft.operators.Multimodal.videoNeardupPairs(s, videoShingleState(s, dir))
 
   /** Per-trigger cost ledger for [[streamPpjoin]]'s incremental
     * finalize: (batch_id, new token rows, accumulated token rows,
@@ -1906,60 +1679,56 @@ object StreamQueries {
     * pass under any trigger split (`ExactSubstrStreamSpec`); the
     * oracle IS that query's brute-force SQL.
     */
-  def streamPpjoin(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.types.{StructType, LongType, StringType, DoubleType}
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val tokLog = graft.TempDirs.scoped("graft_ppjoin_toklog")
-      val pairLog = graft.TempDirs.scoped("graft_ppjoin_pairlog")
-      val tokSchema = new StructType()
-        .add("doc_id", LongType).add("token", StringType)
-        .add("batch_id", LongType)
-      val pairSchema = new StructType()
-        .add("doc_a", LongType).add("doc_b", LongType)
-        .add("shared", LongType).add("n_a", LongType).add("n_b", LongType)
-        .add("jaccard", DoubleType).add("batch_id", LongType)
-      ppjoinTriggerLog.clear()
-      val tok = graft.Tables.spread(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src), "doc_id")
-        .selectExpr("doc_id", graft.operators.InvertedIndex.ToksExpr)
-        .where("size(toks) >= 3")
-        .selectExpr("doc_id", graft.operators.InvertedIndex.ShingleSetExpr)
-      // accumulated-index row count carried as a driver-side running sum
-      // (batches of one AvailableNow run arrive in order, each once):
-      // the ledger's former `acc.count()` re-scanned the FULL token log
-      // every trigger — an O(accumulated) action spent on a diagnostic
-      // (guide §1: don't let the measurement become the cost)
-      var accRows = 0L
-      drain(tok)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
-        val t0 = System.nanoTime()
-        val newTok = batch.select("doc_id", "token").localCheckpoint()
-        // replay-proof accumulated index: a failed batch's own partial
-        // token partition (write landed, checkpoint commit didn't) is
-        // excluded, so the recompute sees the exact pre-batch state
-        val acc = s.read.schema(tokSchema).parquet(tokLog)
-          .where(col("batch_id") < id).select("doc_id", "token")
-        val newPairs = graft.operators.InvertedIndex.ppjoinNewPairs(
-          s, acc.unionByName(newTok), newTok.select("doc_id").distinct())
-        // ledger counts ride the two delta writes as observed metrics
-        // (round 13; was one read-back count job + one count job per
-        // trigger — guide §1: the measurement must not be a job)
-        val obsP = new org.apache.spark.sql.Observation
-        val obsT = new org.apache.spark.sql.Observation
-        appendDeltaBatch(newPairs.observe(obsP,
-          count(lit(1)).as("n")), id, pairLog)
-        appendDeltaBatch(newTok.observe(obsT,
-          count(lit(1)).as("n")), id, tokLog)
-        val nPairs = observed(obsP).getOrElse("n", 0L).asInstanceOf[Long]
-        val nNew = observed(obsT).getOrElse("n", 0L).asInstanceOf[Long]
-        ppjoinTriggerLog.add((id, nNew,
-          accRows, nPairs, (System.nanoTime() - t0) / 1e9)): Unit
-        accRows += nNew
-      })
-      s.read.schema(pairSchema).parquet(pairLog).drop("batch_id")
-    }
+  def streamPpjoin(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.types.{StructType, LongType, StringType, DoubleType}
+    val tokLog = graft.TempDirs.scoped("graft_ppjoin_toklog")
+    val pairLog = graft.TempDirs.scoped("graft_ppjoin_pairlog")
+    val tokSchema = new StructType()
+      .add("doc_id", LongType).add("token", StringType)
+      .add("batch_id", LongType)
+    val pairSchema = new StructType()
+      .add("doc_a", LongType).add("doc_b", LongType)
+      .add("shared", LongType).add("n_a", LongType).add("n_b", LongType)
+      .add("jaccard", DoubleType).add("batch_id", LongType)
+    ppjoinTriggerLog.clear()
+    val tok = graft.Tables.spread(stagedStream(s, s"$dir/documents.parquet", 4), "doc_id")
+      .selectExpr("doc_id", graft.operators.InvertedIndex.ToksExpr)
+      .where("size(toks) >= 3")
+      .selectExpr("doc_id", graft.operators.InvertedIndex.ShingleSetExpr)
+    // accumulated-index row count carried as a driver-side running sum
+    // (batches of one AvailableNow run arrive in order, each once):
+    // the ledger's former `acc.count()` re-scanned the FULL token log
+    // every trigger — an O(accumulated) action spent on a diagnostic
+    // (guide §1: don't let the measurement become the cost)
+    var accRows = 0L
+    drain(tok)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
+      val t0 = System.nanoTime()
+      val newTok = batch.select("doc_id", "token").localCheckpoint()
+      // replay-proof accumulated index: a failed batch's own partial
+      // token partition (write landed, checkpoint commit didn't) is
+      // excluded, so the recompute sees the exact pre-batch state
+      val acc = s.read.schema(tokSchema).parquet(tokLog)
+        .where(col("batch_id") < id).select("doc_id", "token")
+      val newPairs = graft.operators.InvertedIndex.ppjoinNewPairs(
+        s, acc.unionByName(newTok), newTok.select("doc_id").distinct())
+      // ledger counts ride the two delta writes as observed metrics
+      // (round 13; was one read-back count job + one count job per
+      // trigger — guide §1: the measurement must not be a job)
+      val obsP = new org.apache.spark.sql.Observation
+      val obsT = new org.apache.spark.sql.Observation
+      appendDeltaBatch(newPairs.observe(obsP,
+        count(lit(1)).as("n")), id, pairLog)
+      appendDeltaBatch(newTok.observe(obsT,
+        count(lit(1)).as("n")), id, tokLog)
+      val nPairs = observed(obsP).getOrElse("n", 0L).asInstanceOf[Long]
+      val nNew = observed(obsT).getOrElse("n", 0L).asInstanceOf[Long]
+      ppjoinTriggerLog.add((id, nNew,
+        accRows, nPairs, (System.nanoTime() - t0) / 1e9)): Unit
+      accRows += nNew
+    })
+    s.read.schema(pairSchema).parquet(pairLog).drop("batch_id")
+  }
 
   /** Streaming weighted Jaccard — `dedup_weighted_jaccard` at INGEST:
     * documents arrive across triggers, each micro-batch explodes its
@@ -1971,42 +1740,38 @@ object StreamQueries {
     * the final answer equals the batch query under any trigger split;
     * the oracle IS that query's SQL.
     */
-  def streamWeightedJaccard(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.types.{StructType, LongType, StringType, DoubleType}
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val cntLog = graft.TempDirs.scoped("graft_wjacc_cntlog")
-      val pairLog = graft.TempDirs.scoped("graft_wjacc_pairlog")
-      val cntSchema = new StructType()
-        .add("doc_id", LongType).add("shingle", StringType)
-        .add("cnt", LongType).add("batch_id", LongType)
-      val pairSchema = new StructType()
-        .add("doc_a", LongType).add("doc_b", LongType)
-        .add("shared_min", LongType).add("wjaccard", DoubleType)
-        .add("batch_id", LongType)
-      // stateless stream: occurrence counting happens per batch inside
-      // foreachBatch (docs are trigger-complete), so the ONLY state is
-      // the count delta log — no redundant state-store copy
-      val sh = graft.Tables.spread(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src), "doc_id")
-        .selectExpr("doc_id", graft.operators.Dedup.WeightedToksExpr)
-        .where("size(toks) >= 3")
-        .selectExpr("doc_id", graft.operators.Dedup.WeightedShingleExplodeExpr)
-      drain(sh)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
-        val newCnt = batch
-          .groupBy(col("doc_id"), col("shingle"))
-          .agg(count(lit(1)).as("cnt")).localCheckpoint()
-        val acc = s.read.schema(cntSchema).parquet(cntLog)
-          .where(col("batch_id") < id).select("doc_id", "shingle", "cnt")
-        val newPairs = graft.operators.Dedup.weightedJaccardNewPairs(
-          s, acc.unionByName(newCnt), newCnt.select("doc_id").distinct())
-        appendDeltaBatch(newPairs, id, pairLog)
-        appendDeltaBatch(newCnt, id, cntLog)
-      })
-      s.read.schema(pairSchema).parquet(pairLog).drop("batch_id")
-    }
+  def streamWeightedJaccard(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.types.{StructType, LongType, StringType, DoubleType}
+    val cntLog = graft.TempDirs.scoped("graft_wjacc_cntlog")
+    val pairLog = graft.TempDirs.scoped("graft_wjacc_pairlog")
+    val cntSchema = new StructType()
+      .add("doc_id", LongType).add("shingle", StringType)
+      .add("cnt", LongType).add("batch_id", LongType)
+    val pairSchema = new StructType()
+      .add("doc_a", LongType).add("doc_b", LongType)
+      .add("shared_min", LongType).add("wjaccard", DoubleType)
+      .add("batch_id", LongType)
+    // stateless stream: occurrence counting happens per batch inside
+    // foreachBatch (docs are trigger-complete), so the ONLY state is
+    // the count delta log — no redundant state-store copy
+    val sh = graft.Tables.spread(stagedStream(s, s"$dir/documents.parquet", 4), "doc_id")
+      .selectExpr("doc_id", graft.operators.Dedup.WeightedToksExpr)
+      .where("size(toks) >= 3")
+      .selectExpr("doc_id", graft.operators.Dedup.WeightedShingleExplodeExpr)
+    drain(sh)(_.outputMode("append").foreachBatch { (batch: DataFrame, id: Long) =>
+      val newCnt = batch
+        .groupBy(col("doc_id"), col("shingle"))
+        .agg(count(lit(1)).as("cnt")).localCheckpoint()
+      val acc = s.read.schema(cntSchema).parquet(cntLog)
+        .where(col("batch_id") < id).select("doc_id", "shingle", "cnt")
+      val newPairs = graft.operators.Dedup.weightedJaccardNewPairs(
+        s, acc.unionByName(newCnt), newCnt.select("doc_id").distinct())
+      appendDeltaBatch(newPairs, id, pairLog)
+      appendDeltaBatch(newCnt, id, cntLog)
+    })
+    s.read.schema(pairSchema).parquet(pairLog).drop("batch_id")
+  }
 
   /** Streaming image near-dup — `mm_phash_pairs` at INGEST, completing
     * the streaming near-dup arrival form across all three modalities:
@@ -2020,33 +1785,29 @@ object StreamQueries {
     * final answer equals the batch pairs under any trigger split; the
     * oracle IS that query's SQL.
     */
-  def streamImageNeardup(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val chunks = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (id % 3 != 0) Iterator.empty
-          else graft.operators.Multimodal
-            .ahashChunks(graft.operators.Multimodal.imageAssetPayload(id, text))
-            .iterator.map(c => (id, c(0), c(1), c(2), c(3)))
-        })
-        .toDF("asset_id", "c0", "c1", "c2", "c3")
-        .groupBy($"asset_id")
-        .agg(max($"c0").as("c0"), max($"c1").as("c1"),
-          max($"c2").as("c2"), max($"c3").as("c3"))
-      val keys = runDeltaLog(chunks, "update", Seq("asset_id"))
-      graft.operators.Multimodal.phashPairsFromChunks(s,
-        keys.select("asset_id", "c0", "c1", "c2", "c3"))
-    }
+  def streamImageNeardup(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val chunks = stagedStream(s, s"$dir/documents.parquet", 4)
+      .select($"doc_id", $"text")
+      // per-batch decode fan-out: one staged file per trigger = ONE
+      // scan task; hash-spread arrivals so the payload decode that
+      // follows runs on every core (Tables.spread, guide §2.5)
+      .transform(df => graft.Tables.spread(df, "doc_id"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        if (id % 3 != 0) Iterator.empty
+        else graft.operators.Multimodal
+          .ahashChunks(graft.operators.Multimodal.imageAssetPayload(id, text))
+          .iterator.map(c => (id, c(0), c(1), c(2), c(3)))
+      })
+      .toDF("asset_id", "c0", "c1", "c2", "c3")
+      .groupBy($"asset_id")
+      .agg(max($"c0").as("c0"), max($"c1").as("c1"),
+        max($"c2").as("c2"), max($"c3").as("c3"))
+    val keys = runDeltaLog(chunks, "update", Seq("asset_id"))
+    graft.operators.Multimodal.phashPairsFromChunks(s,
+      keys.select("asset_id", "c0", "c1", "c2", "c3"))
+  }
 
   /** Streaming image cluster maintenance — `mm_image_clusters` at
     * INGEST: the same per-asset chunk state as [[streamImageNeardup]]
@@ -2058,83 +1819,100 @@ object StreamQueries {
     * batch finalize over the state snapshot. Equals the batch clusters
     * under any trigger split; the oracle IS that query's SQL.
     */
-  def streamImageClusters(s: SparkSession, dir: String): DataFrame =
-    withStatePartitions(s, 8) {
-      import s.implicits._
-      val src = stageAsDirParts(s, s"$dir/documents.parquet", 4)
-      val schema = s.read.parquet(src).schema
-      val chunks = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select($"doc_id", $"text")
-        // per-batch decode fan-out: one staged file per trigger = ONE
-        // scan task; hash-spread arrivals so the payload decode that
-        // follows runs on every core (Tables.spread, guide §2.5)
-        .transform(df => graft.Tables.spread(df, "doc_id"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (id % 3 != 0) Iterator.empty
-          else {
-            val payload = graft.operators.Multimodal.imageAssetPayload(id, text)
-            graft.operators.Multimodal.ahashChunksDims(payload)
-              .map { case (c, w, h) =>
-                (id, c(0), c(1), c(2), c(3), w.toLong * h)
-              }.iterator
-          }
-        })
-        .toDF("asset_id", "c0", "c1", "c2", "c3", "nw")
-        .groupBy($"asset_id")
-        .agg(max($"c0").as("c0"), max($"c1").as("c1"),
-          max($"c2").as("c2"), max($"c3").as("c3"), max($"nw").as("nw"))
-      val keys = runDeltaLog(chunks, "update", Seq("asset_id"))
-      graft.operators.Multimodal.imageClustersFromChunks(s,
-        keys.select("asset_id", "c0", "c1", "c2", "c3", "nw"))
-    }
+  def streamImageClusters(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val chunks = stagedStream(s, s"$dir/documents.parquet", 4)
+      .select($"doc_id", $"text")
+      // per-batch decode fan-out: one staged file per trigger = ONE
+      // scan task; hash-spread arrivals so the payload decode that
+      // follows runs on every core (Tables.spread, guide §2.5)
+      .transform(df => graft.Tables.spread(df, "doc_id"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        if (id % 3 != 0) Iterator.empty
+        else {
+          val payload = graft.operators.Multimodal.imageAssetPayload(id, text)
+          graft.operators.Multimodal.ahashChunksDims(payload)
+            .map { case (c, w, h) =>
+              (id, c(0), c(1), c(2), c(3), w.toLong * h)
+            }.iterator
+        }
+      })
+      .toDF("asset_id", "c0", "c1", "c2", "c3", "nw")
+      .groupBy($"asset_id")
+      .agg(max($"c0").as("c0"), max($"c1").as("c1"),
+        max($"c2").as("c2"), max($"c3").as("c3"), max($"nw").as("nw"))
+    val keys = runDeltaLog(chunks, "update", Seq("asset_id"))
+    graft.operators.Multimodal.imageClustersFromChunks(s,
+      keys.select("asset_id", "c0", "c1", "c2", "c3", "nw"))
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_image_clusters" -> (streamImageClusters _),
-    "stream_image_neardup" -> (streamImageNeardup _),
-    "stream_weighted_jaccard" -> (streamWeightedJaccard _),
-    "stream_ppjoin" -> (streamPpjoin _),
-    "stream_video_neardup" -> (streamVideoNeardup _),
-    "stream_audio_neardup" -> (streamAudioNeardup _),
-    "stream_audio_containment" -> (streamAudioContainment _),
-    "stream_exact_substr" -> (streamExactSubstr _),
-    "stream_substr_savings" -> (streamSubstrSavings _),
-    "stream_video_containment" -> (streamVideoContainment _),
-    "stream_image_in_video" -> (streamImageInVideo _),
-    "stream_anomaly_mad" -> (streamAnomalyMad _),
-    "stream_lttb" -> (streamLttb _),
-    "stream_cdc_chunks" -> (streamCdcChunks _),
-    "stream_temperature_mix" -> (streamTemperatureMix _),
-    "stream_value_drift" -> (streamValueDrift _),
-    "stream_ar_forecast" -> (streamArForecast _),
-    "stream_hist_quantiles" -> (streamHistQuantiles _),
-    "stream_pacf" -> (streamPacf _),
-    "stream_poisson_burst" -> (streamPoissonBurst _),
-    "stream_ewma" -> (streamEwma _),
-    "stream_changepoint" -> (streamChangepoint _),
-    "stream_acf" -> (streamAcf _),
-    "stream_dedup_incremental" -> (streamDedupIncremental _),
-    "stream_cms_heavy" -> (streamCmsHeavy _),
-    "stream_funnel" -> (streamFunnel _),
-    "stream_bot_flags" -> (streamBotFlags _),
-    "stream_embedding_sigs" -> (streamEmbeddingSigs _),
-    "stream_kmeans_assign" -> (streamKmeansAssign _),
-    "stream_ivfpq_ingest" -> (streamIvfPqIngest _),
-    "stream_wordcount" -> (streamWordCount _),
-    "stream_interval_count" -> (streamIntervalCount _),
-    "stream_session_stats" -> (streamSessionStats _),
-    "stream_dedup_exact" -> (streamDedupExact _),
-    "stream_neardup" -> (streamNearDup _),
-    "stream_click_attribution" -> (streamClickAttribution _),
-    "stream_attribution_outer" -> (streamAttributionOuter _),
-    "stream_mv_counts" -> (streamMvCounts _),
-    "stream_hll_users" -> (streamHllUsers _),
-    "stream_hourly_counts" -> (streamHourlyCounts _),
-    "stream_static_enrich" -> (streamStaticEnrich _),
-    "stream_dropdup_watermark" -> (streamDropdupWatermark _),
-    "stream_dyadic_range" -> (streamDyadicRange _),
-    "stream_topk_users" -> (streamTopkUsers _))
+  /** Shuffle partitions every registered streaming query runs at. */
+  val StatePartitions = 8
+
+  /** The registered streaming queries. Each runs with the shuffle-
+    * partition count sized to the query's STATE volume rather than the
+    * session's batch default: a stateful micro-batch commits one
+    * state-store delta per shuffle partition per trigger, so at
+    * contract-fixture state volume (≤ a few thousand keys; a
+    * stream-stream join keeps four stores per partition) 32 partitions
+    * is pure per-trigger overhead. At production keyspace this number
+    * goes UP; it is per-query state sizing either way. The scope covers
+    * the whole body, drains included, and ends before the caller reads
+    * the returned frame, so the delta-log reconstruction runs at the
+    * session's own setting.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val bodies = Map[String, (SparkSession, String) => DataFrame](
+      "stream_image_clusters" -> (streamImageClusters _),
+      "stream_image_neardup" -> (streamImageNeardup _),
+      "stream_weighted_jaccard" -> (streamWeightedJaccard _),
+      "stream_ppjoin" -> (streamPpjoin _),
+      "stream_video_neardup" -> (streamVideoNeardup _),
+      "stream_audio_neardup" -> (streamAudioNeardup _),
+      "stream_audio_containment" -> (streamAudioContainment _),
+      "stream_exact_substr" -> (streamExactSubstr _),
+      "stream_substr_savings" -> (streamSubstrSavings _),
+      "stream_video_containment" -> (streamVideoContainment _),
+      "stream_image_in_video" -> (streamImageInVideo _),
+      "stream_anomaly_mad" -> (streamAnomalyMad _),
+      "stream_lttb" -> (streamLttb _),
+      "stream_cdc_chunks" -> (streamCdcChunks _),
+      "stream_temperature_mix" -> (streamTemperatureMix _),
+      "stream_value_drift" -> (streamValueDrift _),
+      "stream_ar_forecast" -> (streamArForecast _),
+      "stream_hist_quantiles" -> (streamHistQuantiles _),
+      "stream_pacf" -> (streamPacf _),
+      "stream_poisson_burst" -> (streamPoissonBurst _),
+      "stream_ewma" -> (streamEwma _),
+      "stream_changepoint" -> (streamChangepoint _),
+      "stream_acf" -> (streamAcf _),
+      "stream_dedup_incremental" -> (streamDedupIncremental _),
+      "stream_cms_heavy" -> (streamCmsHeavy _),
+      "stream_funnel" -> (streamFunnel _),
+      "stream_bot_flags" -> (streamBotFlags _),
+      "stream_embedding_sigs" -> (streamEmbeddingSigs _),
+      "stream_kmeans_assign" -> (streamKmeansAssign _),
+      "stream_ivfpq_ingest" -> (streamIvfPqIngest _),
+      "stream_wordcount" -> (streamWordCount _),
+      "stream_interval_count" -> (streamIntervalCount _),
+      "stream_session_stats" -> (streamSessionStats _),
+      "stream_dedup_exact" -> (streamDedupExact _),
+      "stream_neardup" -> (streamNearDup _),
+      "stream_click_attribution" -> (streamClickAttribution _),
+      "stream_attribution_outer" -> (streamAttributionOuter _),
+      "stream_mv_counts" -> (streamMvCounts _),
+      "stream_hll_users" -> (streamHllUsers _),
+      "stream_hourly_counts" -> (streamHourlyCounts _),
+      "stream_static_enrich" -> (streamStaticEnrich _),
+      "stream_dropdup_watermark" -> (streamDropdupWatermark _),
+      "stream_dyadic_range" -> (streamDyadicRange _),
+      "stream_topk_users" -> (streamTopkUsers _))
+    bodies.map { case (name, body) =>
+      name -> ((s: SparkSession, dir: String) =>
+        withStatePartitions(s, StatePartitions)(body(s, dir)))
+    }
+  }
 
   def oracles(dir: String): Map[String, String] = {
     // the signature-ingest oracle embeds the size-derived planes for the

@@ -50,4 +50,14 @@ object ColumnBridge {
       reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry)
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     ext.registerFunctions(reg)
+
+  /** The planner strategies and optimizer rules a SparkSessionExtensions
+    * builds for a session (both builders are private[sql]), for tests.
+    */
+  def injectedRules(ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession)
+      : (Seq[org.apache.spark.sql.execution.SparkStrategy],
+        Seq[org.apache.spark.sql.catalyst.rules.Rule[
+          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]) =
+    (ext.buildPlannerStrategies(spark), ext.buildOptimizerRules(spark))
 }

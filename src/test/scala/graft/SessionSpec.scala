@@ -90,4 +90,16 @@ class SessionSpec extends AnyFunSuite {
     assert(s.experimental.extraStrategies == Seq(TopKPerKeyStrategy, AsOfJoinStrategy))
     assert(s.experimental.extraOptimizations == Seq(PushPartialTopK, NanosRangePushdown))
   }
+
+  test("GraftExtensions injects exactly install's strategies and optimizer rules") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val (strategies, rules) =
+      org.apache.spark.sql.graft.ColumnBridge.injectedRules(ext, TestSpark.spark)
+    val s = TestSpark.spark.newSession()
+    Session.install(s)
+    assert(strategies == s.experimental.extraStrategies)
+    assert(rules == s.experimental.extraOptimizations)
+    assert(strategies == Seq(TopKPerKeyStrategy, AsOfJoinStrategy))
+  }
 }

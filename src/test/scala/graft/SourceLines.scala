@@ -22,8 +22,9 @@ object SourceLines {
     */
   def defLines(f: Path, name: String): Range = {
     val lines = code(f)
-    val from = lines.collectFirst { case (l, n) if l.contains(s"def $name(") => n }
-    assert(from.isDefined, s"$f no longer defines `def $name(`")
+    val sig = s"def $name\\b".r
+    val from = lines.collectFirst { case (l, n) if sig.findFirstIn(l).isDefined => n }
+    assert(from.isDefined, s"$f no longer defines `def $name`")
     val to = lines.collectFirst { case (l, n) if n > from.get && l == "  }" => n }.get
     from.get to to
   }

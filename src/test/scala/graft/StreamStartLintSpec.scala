@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.streaming.LocalCheckpointFileManager]]) and has terminated
   * before its caller reads the result. A `writeStream`, or a `start()` /
   * `toTable()` in a file that builds stream writers, anywhere else in
-  * `src/main` fails this spec.
+  * `src/main` fails this spec. So does a stream source read outside the
+  * staged-stream helper and the two readers that take their own rate, or
+  * a state-sizing scope anywhere but the query registry.
   */
 class StreamStartLintSpec extends AnyFunSuite {
   import SourceLines.root
@@ -40,5 +42,32 @@ class StreamStartLintSpec extends AnyFunSuite {
     assert(body.count(_.contains(".start()")) == 1)
     Seq("awaitTermination()", "Trigger.AvailableNow()", "Session.install(")
       .foreach(s => assert(body.exists(_.contains(s)), s"drain lost `$s`"))
+  }
+
+  /** `src/main` lines containing `needle`, as `file:line code`, except
+    * in `Streams.scala` when `streamsToo` and in the named defs of
+    * StreamQueries.scala.
+    */
+  private def outside(needle: String, defs: Seq[String], streamsToo: Boolean): Seq[String] = {
+    val allowed = defs.map(SourceLines.defLines(drainFile, _))
+    val streams = root.resolve("graft/streaming/Streams.scala")
+    for {
+      f <- SourceLines.files if !(streamsToo && f == streams)
+      (l, n) <- SourceLines.code(f) if l.contains(needle)
+      if !(f == drainFile && allowed.exists(_.contains(n)))
+    } yield s"${root.relativize(f)}:$n ${l.trim}"
+  }
+
+  test("stream sources are read only by the staged-stream helper and the two rate-taking readers") {
+    val found = outside("readStream",
+      Seq("stagedStream", "sessionStatsStream", "rateLimitedWordCount"), streamsToo = true)
+    assert(found.isEmpty,
+      "read stream sources through StreamQueries.stagedStream:\n" + found.mkString("\n"))
+  }
+
+  test("state sizing is scoped only by the query registry") {
+    val found = outside("withStatePartitions(", Seq("queries"), streamsToo = false)
+    assert(found.isEmpty,
+      "StreamQueries.queries sizes every registered query's state:\n" + found.mkString("\n"))
   }
 }
