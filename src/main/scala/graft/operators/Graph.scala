@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Iterate, Tables}
 
 /** Link-analysis operators over graphs DERIVED from the corpus — the
   * quality-weighting signal family a web-scale training-data pipeline
@@ -18,14 +18,15 @@ import graft.Tables
   *     checkpointed; per-iteration work is one hash join (ranks ⋈ edges
   *     on src) + one partial-aggregating shuffle on dst. Rank state is
   *     O(nodes), never collected to the driver.
-  *   - Contributions are summed as DECIMAL(18,9) after a 9-dp round:
+  *   - Contributions are summed as DECIMAL(18,9) after a 9-dp re-round:
   *     decimal addition is associative, so the result is independent of
   *     partition order AND engine — that is what makes an ITERATIVE
   *     double-arithmetic pipeline exactly oracle-checkable (the same
   *     trick as the centroid means; a raw double sum would drift by
   *     ulps per iteration and diverge by round 10).
-  *   - `localCheckpoint` per iteration truncates lineage (the standard
-  *     iterative-DataFrame shape, same as [[Dedup.connectedComponents]]).
+  *   - Every loop runs through [[graft.Iterate]]: each call site names
+  *     its lineage cadence (pin every k rounds, or lazily up to round
+  *     k), and a round's pins are freed once a later round has pinned.
   *   - Fixed iteration count (10): deterministic cost, no convergence
   *     action on the critical path; production runs pick iterations by
   *     graph diameter, not residual polling.
@@ -33,7 +34,7 @@ import graft.Tables
 object Graph {
 
   val Iters = 10
-  /** Lineage-truncation cadence for the lazy iteration chain. */
+  /** Lineage-truncation cadence for the damped recurrence's lazy chain. */
   val CkptEvery = 5
 
   /** Token-transition edge list: (src, dst, cnt). One explode + one
@@ -51,13 +52,72 @@ object Graph {
       .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
   }
 
+  /** DuckDB restatement of [[tokenEdges]]: the `toks` CTE, then the
+    * edge CTE `name` with one row per distinct (src, dst), carrying its
+    * count `cnt` when `counted`, MATERIALIZED when `materialized`.
+    */
+  private def tokenEdgeCtes(name: String, counted: Boolean = true,
+      materialized: Boolean = false): String = {
+    val cnt = if (counted) ", CAST(count(*) AS BIGINT) AS cnt" else ""
+    val hint = if (materialized) " MATERIALIZED" else ""
+    s"""toks AS (
+       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
+       |$name AS$hint (
+       |  SELECT src, dst$cnt FROM (
+       |    SELECT
+       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
+       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
+       |    FROM toks WHERE len(t) >= 2)
+       |  GROUP BY src, dst)""".stripMargin
+  }
+
+  /** Canonical undirected edges (u < v, self-loops dropped) of any
+    * (src, dst, …) edge list.
+    */
+  private def undirected(rawEdges: DataFrame): DataFrame =
+    rawEdges.where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
+  /** The pinned node set (node) of a (src, dst, …) edge list. */
+  private def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst"))).distinct().localCheckpoint()
+
+  /** (node, deg) over an undirected (u, v) edge set. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("node")).union(und.select(col("v")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+
+  /** DuckDB restatement of [[undirected]] over the token graph: the
+    * token-edge CTEs, `und`, and `deg` (its node degrees).
+    */
+  private val undCtes: String =
+    s"""${tokenEdgeCtes("tedges", counted = false)},
+       |und AS (
+       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+       |  FROM tedges WHERE src <> dst),
+       |deg AS (
+       |  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
+       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
+       |  GROUP BY node)""".stripMargin
+
+  /** floor(x·1e9 + 0.5) / 1e9: the 9-dp re-round both engines compute
+    * as one IEEE sequence (native round(x, 9) is not one: Spark rounds
+    * the decimal string half up, DuckDB rounds x·1e9 in floating point,
+    * so the two part at half-way points).
+    */
+  private def round9(x: Column): Column = floor(x * 1e9 + 0.5) / 1e9
+
   /** Weighted PageRank over the token-transition graph, 10 fixed
     * iterations, damping 0.85, "leaky" dangling handling (nodes with no
     * out-edges leak their mass — both engines implement the identical
     * recurrence, which is the checked contract):
     *
     *   r₀(v)    = 1/n
-    *   rₜ₊₁(v) = round(0.15/n + 0.85 · Σ_{u→v} round(rₜ(u)·w_uv, 9), 9)
+    *   rₜ₊₁(v) = ⌊(0.15/n + 0.85 · Σ_{u→v} cₜ(u,v)) · 1e9 + 0.5⌋ / 1e9
+    *   cₜ(u,v)  = ⌊rₜ(u) · w_uv · 1e9 + 0.5⌋ / 1e9   (summed as DECIMAL)
     *   w_uv     = cnt(u,v) / out_cnt(u)   (double division)
     */
   def pagerank(s: SparkSession, dir: String): DataFrame =
@@ -67,65 +127,60 @@ object Graph {
     * scale-growth spec drives it with synthetic graphs at 1× and 10×).
     */
   def pagerankOnEdges(rawEdges: DataFrame, iters: Int = Iters): DataFrame = {
-    val s = rawEdges.sparkSession
+    val d = new Damped(rawEdges)
+    val n = d.nodes.count()
+    d.ranks(lit(1.0 / n), lit(0.15 / n), iters)
+  }
+
+  /** The damped recurrence [[pagerankOnEdges]] and [[pprOnEdges]] share:
+    * the edge list, out-mass, normalized weights and node set, pinned
+    * once; per iteration one hash join (ranks ⋈ weights on src) and one
+    * partial-aggregating shuffle on dst, rank state O(nodes).
+    */
+  private final class Damped(rawEdges: DataFrame) {
+    private val s = rawEdges.sparkSession
     import s.implicits._
-    val edges = rawEdges.localCheckpoint()
-    val outW = edges.groupBy($"src").agg(sum($"cnt").as("oc"))
-    val weighted = edges.join(outW, "src")
+    private val edges = rawEdges.localCheckpoint()
+    val outW: DataFrame = edges.groupBy($"src").agg(sum($"cnt").as("oc"))
+    private val weighted = edges.join(outW, "src")
       .select($"src", $"dst",
         ($"cnt".cast("double") / $"oc".cast("double")).as("w"))
       .localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
-    val n = nodes.count()
-    var ranks = nodes.select($"node", lit(1.0 / n).as("rank"))
-    // the iteration count is FIXED (no convergence action), so the loop
-    // can stay LAZY: one 10-iteration plan, one job at materialization
-    // — vs a per-iteration localCheckpoint, which costs 10 sequential
-    // tiny jobs (measured ~3 s at sf0.1, mostly scheduling). The inputs
-    // (edges/weights/nodes) ARE checkpointed above, so the deep plan
-    // bottoms out in pinned blocks; checkpoint every `CkptEvery` rounds
-    // only to bound analysis depth on much larger iteration budgets.
-    for (i <- 1 to iters) {
-      val contribs = weighted.join(ranks, $"src" === $"node")
-        .select($"dst",
-          round($"rank" * $"w", 9).cast("decimal(18,9)").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("csum"))
-      ranks = nodes.join(contribs, $"node" === $"dst", "left_outer")
-        .select($"node",
-          round(lit(0.15 / n) +
-            lit(0.85) * coalesce($"csum".cast("double"), lit(0.0)), 9)
-            .as("rank"))
-      if (i % CkptEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select($"node", $"rank")
+    val nodes: DataFrame = nodesOf(edges)
+
+    /** (node, rank) after `iters` rounds from r₀ = `init`, with teleport
+      * term `teleport` (both columns over `node`). The iteration count is
+      * fixed (no convergence action), so the chain stays LAZY — one plan,
+      * one job at materialization, vs 10 sequential tiny jobs for a pin
+      * per round (measured ~3 s at sf0.1, mostly scheduling); the inputs
+      * are pinned above, and a pin every [[CkptEvery]] rounds, never on
+      * the last, bounds analysis depth on larger iteration budgets.
+      */
+    def ranks(init: Column, teleport: Column, iters: Int): DataFrame =
+      Iterate.fold(nodes.select($"node", init.as("rank")), 1 to iters,
+          every = CkptEvery, pinLast = false) { (ranks, r) =>
+        val contribs = weighted.join(ranks, $"src" === $"node")
+          .select($"dst", round9($"rank" * $"w").cast("decimal(18,9)").as("c"))
+          .groupBy($"dst").agg(sum($"c").as("csum"))
+        r.pin(nodes.join(contribs, $"node" === $"dst", "left_outer")
+          .select($"node", round9(teleport +
+            lit(0.85) * coalesce($"csum".cast("double"), lit(0.0))).as("rank")))
+      }
   }
 
-  /** Directed token-transition edge CTEs (toks + edges) — the shared
-    * DuckDB restatement of [[tokenEdges]].
-    */
-  private[operators] val tokenEdgesCtes: String =
-    s"""toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |edges AS (
-       |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst)""".stripMargin
-
-  /** DuckDB restatement of [[pagerankOnEdges]] over any `edges`
-    * (src, dst, cnt) CTE chain: the 10 iterations unrolled as chained
-    * CTEs (recursive CTEs disallow aggregates in the recursive term,
-    * and unrolling keeps the recurrence literally identical).
-    * `finalize` is the terminal SELECT over `r$Iters` — a parameter
-    * (not post-hoc string surgery) so derived oracles like
+  /** DuckDB restatement of [[Damped.ranks]] over any `edges` (src, dst,
+    * cnt) CTE chain: the iterations unrolled as chained CTEs r0..r10
+    * (recursive CTEs disallow aggregates in the recursive term, and
+    * unrolling keeps the recurrence literally identical). `init` and
+    * `teleport` are the r₀ rank and the teleport term over `node`; they
+    * may read `nn` (the node count) and `sd` (the highest-out-mass
+    * seed). `finalize` is the terminal SELECT over `r$Iters` — a
+    * parameter (not post-hoc string surgery) so derived oracles like
     * [[textrankSql]] can't silently lose their projection when this
     * template changes.
     */
-  private[operators] def pagerankSqlOver(edgesCtes: String,
-      finalize: String = s"SELECT node, rank FROM r$Iters"): String = {
+  private def dampedSql(edgesCtes: String, init: String, teleport: String,
+      finalize: String): String = {
     val base =
       s"""WITH $edgesCtes,
          |outw AS (SELECT src, sum(cnt) AS oc FROM edges GROUP BY src),
@@ -134,24 +189,30 @@ object Graph {
          |  FROM edges e JOIN outw o ON e.src = o.src),
          |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
          |nn AS (SELECT count(*) AS n FROM nodes),
-         |r0 AS (
-         |  SELECT node, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank
-         |  FROM nodes)""".stripMargin
+         |sd AS (SELECT src FROM outw ORDER BY oc DESC, src LIMIT 1),
+         |r0 AS (SELECT node, $init AS rank FROM nodes)""".stripMargin
     val iters = (1 to Iters).map { i =>
       s"""r$i AS (
-         |  SELECT nd.node,
-         |    round(CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
-         |      + CAST(0.85 AS DOUBLE)
-         |        * coalesce(CAST(s.csum AS DOUBLE), CAST(0 AS DOUBLE)), 9) AS rank
+         |  SELECT node,
+         |    floor(($teleport + CAST(0.85 AS DOUBLE)
+         |      * coalesce(CAST(s.csum AS DOUBLE), CAST(0 AS DOUBLE))) * 1e9 + 0.5)
+         |      / 1e9 AS rank
          |  FROM nodes nd LEFT JOIN (
-         |    SELECT w.dst, sum(CAST(round(r.rank * w.w, 9) AS DECIMAL(18,9))) AS csum
+         |    SELECT w.dst,
+         |      sum(CAST(floor(r.rank * w.w * 1e9 + 0.5) / 1e9 AS DECIMAL(18,9))) AS csum
          |    FROM w JOIN r${i - 1} r ON w.src = r.node GROUP BY w.dst) s
          |    ON nd.node = s.dst)""".stripMargin
     }.mkString(",\n")
     s"$base,\n$iters\n$finalize"
   }
 
-  val pagerankSql: String = pagerankSqlOver(tokenEdgesCtes)
+  /** [[dampedSql]] with pagerank's uniform r₀ and teleport. */
+  private def pagerankSqlOver(edgesCtes: String, finalize: String): String =
+    dampedSql(edgesCtes, "CAST(1 AS DOUBLE) / (SELECT n FROM nn)",
+      "CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)", finalize)
+
+  val pagerankSql: String =
+    pagerankSqlOver(tokenEdgeCtes("edges"), s"SELECT node, rank FROM r$Iters")
 
   /** TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank on
     * the UNDIRECTED token co-occurrence graph (adjacent-token window,
@@ -182,15 +243,7 @@ object Graph {
     // the iteration CTEs consume `edges`; here that must be the
     // symmetrized list, so the directed build is named edges0
     val symCtes =
-      s"""toks AS (
-         |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-         |edges0 AS (
-         |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-         |    SELECT
-         |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-         |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-         |    FROM toks WHERE len(t) >= 2)
-         |  GROUP BY src, dst),
+      s"""${tokenEdgeCtes("edges0")},
          |edges AS (
          |  SELECT src, dst, CAST(sum(cnt) AS BIGINT) AS cnt FROM (
          |    SELECT src, dst, cnt FROM edges0
@@ -216,7 +269,9 @@ object Graph {
     * iterations stay bit-equal to the unrolled oracle — same rationale
     * as the pagerank decimal trick. Rankings are unaffected by the
     * norm choice.) Per iteration: two join+partial-agg shuffles on the
-    * edge keys, rank state O(nodes) — the Pregel-on-DataFrames shape.
+    * edge keys, rank state O(nodes) — the Pregel-on-DataFrames shape,
+    * run by [[graft.Iterate]] with both normalizations pinned every
+    * round and the previous round's pins freed.
     */
   val HitsIters = 5
 
@@ -227,11 +282,8 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").distinct().localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
+    val nodes = nodesOf(edges)
     val n = nodes.count()
-    var scores = nodes.select($"node",
-      lit(1.0 / n).as("hub"), lit(1.0 / n).as("auth"))
     def l1Normalized(df: DataFrame, c: String): DataFrame = {
       val tot = df.agg(
         sum(round(col(c), 9).cast("decimal(18,9)")).as("tot"))
@@ -240,13 +292,14 @@ object Graph {
           round(col(c) / col("tot").cast("double"), 9))
         .drop("tot")
     }
-    // EAGER localCheckpoint per normalization — deliberately NOT the
-    // lazy pagerank chain: authN is consumed TWICE per iteration (the
-    // output join and the hub recurrence), so an unmaterialized chain
+    // Both normalizations pin on every round — deliberately NOT the lazy
+    // pagerank chain: authN is consumed TWICE per iteration (the output
+    // join and the hub recurrence), so an unmaterialized chain
     // re-evaluates the doubled subtree per level — measured 9.6 s lazy
     // vs 4.2 s checkpointed at sf0.1 (pagerank's rank frame is consumed
     // once per level, which is why lazy wins there).
-    for (i <- 1 to iters) {
+    Iterate.fold(nodes.select($"node", lit(1.0 / n).as("hub"), lit(1.0 / n).as("auth")),
+        1 to iters) { (scores, r) =>
       val auth = nodes.join(
         edges.join(scores.select($"node", $"hub"), $"src" === $"node")
           .select($"dst", round($"hub", 9).cast("decimal(18,9)").as("c"))
@@ -254,7 +307,7 @@ object Graph {
         $"node" === $"dst", "left_outer")
         .select($"node",
           coalesce($"araw".cast("double"), lit(0.0)).as("auth"))
-      val authN = l1Normalized(auth, "auth").localCheckpoint()
+      val authN = r.pin(l1Normalized(auth, "auth"))
       val hub = nodes.join(
         edges.join(authN.select($"node".as("an"), $"auth"), $"dst" === $"an")
           .select($"src", round($"auth", 9).cast("decimal(18,9)").as("c"))
@@ -262,12 +315,10 @@ object Graph {
         $"node" === $"src", "left_outer")
         .select($"node",
           coalesce($"hraw".cast("double"), lit(0.0)).as("hub"))
-      val hubN = l1Normalized(hub, "hub").localCheckpoint()
-      scores = hubN.join(authN.withColumnRenamed("node", "n2"),
-        $"node" === $"n2")
+      val hubN = r.pin(l1Normalized(hub, "hub"))
+      hubN.join(authN.withColumnRenamed("node", "n2"), $"node" === $"n2")
         .select($"node", $"hub", $"auth")
     }
-    scores
   }
 
   /** DuckDB restatement: iterations unrolled, each normalization the
@@ -275,14 +326,7 @@ object Graph {
     */
   val hitsSql: String = {
     val base =
-      s"""WITH toks AS MATERIALIZED (
-         |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT
-         |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-         |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-         |    FROM toks WHERE len(t) >= 2)),
+      s"""WITH ${tokenEdgeCtes("edges", counted = false, materialized = true)},
          |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
          |nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
          |s0 AS (
@@ -349,24 +393,10 @@ object Graph {
   def trianglesOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
+    val und = undirected(rawEdges)
       .localCheckpoint() // reused by degrees, orientation, and the close
-    val deg = und.select($"u".as("node")).union(und.select($"v"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
-      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
-    // total order on vertices: (degree, name) — ties broken by name so
-    // the orientation is a strict order and every edge orients uniquely
-    val uFirst = struct($"du", $"u") < struct($"dv", $"v")
-    val oriented = withDeg.select(
-      when(uFirst, $"u").otherwise($"v").as("src"),
-      when(uFirst, $"v").otherwise($"u").as("dst"),
-      when(uFirst, struct($"dv".as("d"), $"v".as("n")))
-        .otherwise(struct($"du".as("d"), $"u".as("n"))).as("dk"))
-      .localCheckpoint() // both wedge sides + the close probe
+    val deg = degrees(und)
+    val oriented = orient(und, deg)
     val wedges = oriented.select($"src", $"dst".as("b"), $"dk".as("bk"))
       .join(oriented.select($"src", $"dst".as("c"), $"dk".as("ck")), "src")
       .where($"bk" < $"ck")
@@ -383,27 +413,33 @@ object Graph {
         round(lit(3.0) * $"n_triangles" / $"n_wedges", 6).as("global_cc"))
   }
 
+  /** `und` oriented from its (degree, node)-smaller endpoint to the
+    * larger, as (src, dst, dk) with dk = (deg, name) of dst, pinned: both
+    * wedge sides and the close probe read it.
+    */
+  private def orient(und: DataFrame, deg: DataFrame): DataFrame = {
+    val s = und.sparkSession
+    import s.implicits._
+    val withDeg = und
+      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
+      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
+    // total order on vertices: (degree, name) — ties broken by name so
+    // the orientation is a strict order and every edge orients uniquely
+    val uFirst = struct($"du", $"u") < struct($"dv", $"v")
+    withDeg.select(
+      when(uFirst, $"u").otherwise($"v").as("src"),
+      when(uFirst, $"v").otherwise($"u").as("dst"),
+      when(uFirst, struct($"dv".as("d"), $"v".as("n")))
+        .otherwise(struct($"du".as("d"), $"u".as("n"))).as("dk"))
+      .localCheckpoint()
+  }
+
   /** DuckDB restatement: the simpler name-ordered u<v<w join counts the
     * same triangles (orientation scheme changes the join sizes, never
     * the census), which is exactly why it is safe as the oracle.
     */
   val trianglesSql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
-       |deg AS (
-       |  SELECT node, count(*) AS deg FROM (
-       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |  GROUP BY node),
+    s"""WITH $undCtes,
        |tri AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_triangles
        |  FROM und e1
@@ -440,12 +476,8 @@ object Graph {
       maxDeg: Int = MaxWitnessDeg): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = und.select($"u".as("node")).union(und.select($"v"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val und = undirected(rawEdges).localCheckpoint()
+    val deg = degrees(und)
     // adjacency rows (witness, neighbor), witness capped
     val adj = und.select($"u".as("w"), $"v".as("n"))
       .union(und.select($"v".as("w"), $"u".as("n")))
@@ -468,22 +500,7 @@ object Graph {
   }
 
   val neighborSimilaritySql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
-       |deg AS (
-       |  SELECT node, count(*) AS deg FROM (
-       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |  GROUP BY node),
+    s"""WITH $undCtes,
        |adj AS (
        |  SELECT x.w, x.n FROM (
        |    SELECT u AS w, v AS n FROM und
@@ -514,9 +531,9 @@ object Graph {
     * Frontier-only expansion: level h joins ONLY rows at dist h-1
     * against the edge list (keyed on src), then folds into the visited
     * set with a min-aggregate — the Pregel BFS shape. Each level's
-    * frame is doubly consumed (filter-join + union), so levels are
-    * eagerly localCheckpoint'ed like HITS (the lazy chain would
-    * re-evaluate the doubled subtree per level). Per-level cost is one
+    * frame is doubly consumed (filter-join + union), so [[graft.Iterate]]
+    * pins every level like HITS (the lazy chain would re-evaluate the
+    * doubled subtree per level) and frees the level it replaces. Per-level cost is one
     * |frontier|-row join + one |visited| min-agg; at 100 TB the edge
     * list partitioning on src is reused across all levels.
     *
@@ -552,27 +569,30 @@ object Graph {
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").localCheckpoint()
     val seed = edges.agg(min($"src").as("node"))
-    var dist = seed.select($"node", lit(0L).as("dist")).localCheckpoint()
-    for (h <- 1 to maxHops) {
-      val next = dist.where($"dist" === (h - 1))
+    val init = seed.select($"node", lit(0L).as("dist")).localCheckpoint()
+    Iterate.fold(init, 1 to maxHops) { (dist, r) =>
+      val next = dist.where($"dist" === (r.i - 1))
         .join(edges, $"node" === $"src")
-        .select($"dst".as("node"), lit(h.toLong).as("dist"))
-      dist = dist.union(next)
-        .groupBy($"node").agg(min($"dist").as("dist"))
-        .localCheckpoint()
-    }
-    dist.select($"node", $"dist")
+        .select($"dst".as("node"), lit(r.i.toLong).as("dist"))
+      r.pin(dist.union(next).groupBy($"node").agg(min($"dist").as("dist")))
+    }.select($"node", $"dist")
   }
 
-  val bfsSql: String =
-    s"""WITH RECURSIVE trade AS (
+  /** DuckDB restatement of [[tradeEdges]]: `trade` and its symmetric
+    * edge list `e`.
+    */
+  private val tradeCtes: String =
+    s"""trade AS (
        |  SELECT DISTINCT 'C' || o_custkey AS c, 'S' || l_suppkey AS s
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  WHERE l_quantity >= $BfsMinQty),
        |e AS (
        |  SELECT c AS src, s AS dst FROM trade
        |  UNION
-       |  SELECT s, c FROM trade),
+       |  SELECT s, c FROM trade)""".stripMargin
+
+  val bfsSql: String =
+    s"""WITH RECURSIVE $tradeCtes,
        |seed AS (SELECT min(src) AS node FROM e),
        |w AS (
        |  SELECT node, 0 AS d FROM seed
@@ -590,14 +610,16 @@ object Graph {
     * degrees among survivors each round — one edges⋈survivors⋈survivors
     * hash join + one count aggregate per round, the edge list
     * partitioned once on src and reused every round (the BFS idiom).
-    * Rounds are eagerly localCheckpoint'ed because each round's
-    * survivor frame is consumed twice (both join sides — the HITS
-    * doubly-consumed rationale). `KcoreRounds` = 8 is a fixpoint bound
-    * for this graph, not a truncation: both driver SFs reach fixpoint
-    * in ≤ 3 rounds (KcoreSpec asserts the last round removes nothing
-    * and every member keeps ≥ k in-core neighbors), and extra rounds
-    * are idempotent, so the 8-round unrolled oracle computes the same
-    * core. At 100 TB the peel is O(rounds) shuffles on a shrinking
+    * [[graft.Iterate]] pins every round because each round's survivor
+    * frame is consumed twice (both join sides — the HITS
+    * doubly-consumed rationale), and frees the round it replaces.
+    * `KcoreRounds` = 8 is a fixpoint bound for this graph, not a
+    * truncation: both driver SFs reach fixpoint in ≤ 3 rounds
+    * (KcoreSpec asserts the last round removes nothing and every member
+    * keeps ≥ k in-core neighbors), and extra rounds are idempotent, so
+    * the 8-round unrolled oracle (rounds MATERIALIZED: each reads the
+    * previous one twice, which DuckDB would otherwise inline 2⁸-fold)
+    * computes the same core. At 100 TB the peel is O(rounds) shuffles on a shrinking
     * node set — the shape that matters is that no round ever touches
     * more than the surviving edges.
     *
@@ -614,37 +636,24 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").distinct().localCheckpoint()
-    var surv = edges.select($"src".as("node")).distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
-      surv = edges
-        .join(surv.select($"node".as("_a")), $"src" === $"_a")
-        .join(surv.select($"node".as("_b")), $"dst" === $"_b")
-        .groupBy($"src").agg(count(lit(1)).as("deg"))
-        .where($"deg" >= k)
-        .select($"src".as("node"))
-        .localCheckpoint()
-    }
-    edges
+    // (src, deg): each survivor's degree among the survivors
+    def inCore(surv: DataFrame): DataFrame = edges
       .join(surv.select($"node".as("_a")), $"src" === $"_a")
       .join(surv.select($"node".as("_b")), $"dst" === $"_b")
-      .groupBy($"src")
-      .agg(count(lit(1)).as("deg"))
-      .select($"src".as("node"), $"deg")
+      .groupBy($"src").agg(count(lit(1)).as("deg"))
+    val init = edges.select($"src".as("node")).distinct().localCheckpoint()
+    val core = Iterate.fold(init, 1 to rounds) { (surv, r) =>
+      r.pin(inCore(surv).where($"deg" >= k).select($"src".as("node")))
+    }
+    inCore(core).select($"src".as("node"), $"deg")
   }
 
   val kcoreSql: String = {
     val header =
-      s"""WITH trade AS (
-         |  SELECT DISTINCT 'C' || o_custkey AS c, 'S' || l_suppkey AS s
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  WHERE l_quantity >= $BfsMinQty),
-         |e AS (
-         |  SELECT c AS src, s AS dst FROM trade
-         |  UNION
-         |  SELECT s, c FROM trade),
+      s"""WITH $tradeCtes,
          |n0 AS (SELECT DISTINCT src AS node FROM e)""".stripMargin
     val stages = (1 to KcoreRounds).map { i =>
-      s"""n$i AS (
+      s"""n$i AS MATERIALIZED (
          |  SELECT e.src AS node FROM e
          |  JOIN n${i - 1} a ON e.src = a.node
          |  JOIN n${i - 1} b ON e.dst = b.node
@@ -680,12 +689,8 @@ object Graph {
       maxDeg: Int = MaxWitnessDeg): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = und.select($"u".as("node")).union(und.select($"v"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val und = undirected(rawEdges).localCheckpoint()
+    val deg = degrees(und)
     val adj = und.select($"u".as("w"), $"v".as("n"))
       .union(und.select($"v".as("w"), $"u".as("n")))
       .join(deg.select($"node".as("w"), $"deg".as("wdeg")), "w")
@@ -706,22 +711,7 @@ object Graph {
   }
 
   val adamicAdarSql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
-       |deg AS (
-       |  SELECT node, count(*) AS deg FROM (
-       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |  GROUP BY node),
+    s"""WITH $undCtes,
        |adj AS (
        |  SELECT x.w, x.n,
        |    CAST(floor(1e6 / ln(CAST(d.deg AS DOUBLE)) + 0.5) AS BIGINT) AS wt
@@ -754,22 +744,9 @@ object Graph {
   def localClusteringOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = und.select($"u".as("node")).union(und.select($"v"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
-      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
-    val uFirst = struct($"du", $"u") < struct($"dv", $"v")
-    val oriented = withDeg.select(
-      when(uFirst, $"u").otherwise($"v").as("src"),
-      when(uFirst, $"v").otherwise($"u").as("dst"),
-      when(uFirst, struct($"dv".as("d"), $"v".as("n")))
-        .otherwise(struct($"du".as("d"), $"u".as("n"))).as("dk"))
-      .localCheckpoint()
+    val und = undirected(rawEdges).localCheckpoint()
+    val deg = degrees(und)
+    val oriented = orient(und, deg)
     val wedges = oriented.select($"src", $"dst".as("b"), $"dk".as("bk"))
       .join(oriented.select($"src", $"dst".as("c"), $"dk".as("ck")), "src")
       .where($"bk" < $"ck")
@@ -789,22 +766,7 @@ object Graph {
   }
 
   val localClusteringSql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
-       |deg AS (
-       |  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |  GROUP BY node),
+    s"""WITH $undCtes,
        |tri AS (
        |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
        |  FROM und e1
@@ -843,12 +805,8 @@ object Graph {
   def assortativityOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = und.select($"u".as("node")).union(und.select($"v"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val und = undirected(rawEdges).localCheckpoint()
+    val deg = degrees(und)
     val sym = und.select($"u".as("a"), $"v".as("b"))
       .union(und.select($"v".as("a"), $"u".as("b")))
       .join(deg.select($"node".as("a"), $"deg".as("x")), "a")
@@ -872,22 +830,7 @@ object Graph {
   }
 
   val assortativitySql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
-       |deg AS (
-       |  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-       |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |  GROUP BY node),
+    s"""WITH $undCtes,
        |sym AS (
        |  SELECT da.deg AS x, db.deg AS y
        |  FROM (SELECT u AS a, v AS b FROM und
@@ -934,10 +877,7 @@ object Graph {
   def modularityOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint()
+    val und = undirected(rawEdges).localCheckpoint()
     val lab = (c: String) => expr(s"substring($c, 1, 1)")
     val edgeStats = und.agg(count(lit(1)).as("m"),
       sum(when(lab("u") === lab("v"), 1L).otherwise(0L)).as("intra"))
@@ -954,18 +894,7 @@ object Graph {
   }
 
   val modularitySql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
+    s"""WITH $undCtes,
        |es AS (
        |  SELECT CAST(count(*) AS BIGINT) AS m,
        |    CAST(sum(CASE WHEN substring(u, 1, 1) = substring(v, 1, 1)
@@ -996,8 +925,8 @@ object Graph {
     * unlike BFS's frontier-only expansion, a weighted distance can
     * improve at a later hop, so the full distance frame joins each
     * round (textbook Bellman–Ford, one join + one min-aggregate per
-    * round on the same edge partitioning, frames localCheckpoint'ed for
-    * the doubly-consumed chain). Integer costs keep the min exact; the
+    * round on the same edge partitioning, every round pinned through
+    * [[graft.Iterate]] for the doubly-consumed chain). Integer costs keep the min exact; the
     * oracle is the recursive-CTE walk enumeration bounded by the same
     * hop count with min(total cost) per node.
     *
@@ -1029,15 +958,12 @@ object Graph {
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst", $"cost").localCheckpoint()
     val seed = edges.agg(min($"src").as("node"))
-    var dist = seed.select($"node", lit(0L).as("dist")).localCheckpoint()
-    for (_ <- 1 to maxHops) {
+    val init = seed.select($"node", lit(0L).as("dist")).localCheckpoint()
+    Iterate.fold(init, 1 to maxHops) { (dist, r) =>
       val relaxed = dist.join(edges, $"node" === $"src")
         .select($"dst".as("node"), ($"dist" + $"cost").as("dist"))
-      dist = dist.union(relaxed)
-        .groupBy($"node").agg(min($"dist").as("dist"))
-        .localCheckpoint()
-    }
-    dist.select($"node", $"dist")
+      r.pin(dist.union(relaxed).groupBy($"node").agg(min($"dist").as("dist")))
+    }.select($"node", $"dist")
   }
 
   val ssspSql: String =
@@ -1079,10 +1005,10 @@ object Graph {
     * Per round: one equi-join of the symmetric neighbor list against
     * the label frame (both keyed on the node), a (node, label) partial
     * count, and a per-node argmax window — the Pregel-on-DataFrames
-    * shape every iterative op here uses, with `localCheckpoint`
-    * truncating the doubly-consumed lineage. At 100 TB the round cost
-    * is one shuffle keyed on node over the edge list; fixed rounds cap
-    * the chain (production LPA runs 3–5 sweeps).
+    * shape every iterative op here uses, with [[graft.Iterate]] pinning
+    * every round to truncate the doubly-consumed lineage. At 100 TB the
+    * round cost is one shuffle keyed on node over the edge list; fixed
+    * rounds cap the chain (production LPA runs 3–5 sweeps).
     */
   def labelProp(s: SparkSession, dir: String): DataFrame =
     labelPropOnEdges(tokenEdges(s, dir))
@@ -1091,9 +1017,7 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val und = rawEdges.where($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
+    val und = undirected(rawEdges)
     val nbr = und.select($"u".as("node"), $"v".as("n"))
       .union(und.select($"v".as("node"), $"u".as("n")))
       .localCheckpoint()
@@ -1101,13 +1025,12 @@ object Graph {
       .select($"node", $"node".as("lab"))
     val w = Window.partitionBy($"node")
       .orderBy($"c".desc, $"lab".asc)
-    val fin = (1 to LpaIters).foldLeft(init) { (labels, _) =>
-      nbr.join(labels.select($"node".as("n"), $"lab"), "n")
+    val fin = Iterate.fold(init, 1 to LpaIters) { (labels, r) =>
+      r.pin(nbr.join(labels.select($"node".as("n"), $"lab"), "n")
         .groupBy($"node", $"lab").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
         .where($"rn" === 1)
-        .select($"node", $"lab")
-        .localCheckpoint()
+        .select($"node", $"lab"))
     }
     fin.select($"node".as("token"), $"lab".as("community"))
   }
@@ -1123,18 +1046,7 @@ object Graph {
          |    GROUP BY nb.node, l.lab)
          |  WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM tedges WHERE src <> dst),
+    s"""WITH $undCtes,
        |nbr AS (
        |  SELECT u AS node, v AS n FROM und
        |  UNION ALL
@@ -1195,44 +1107,40 @@ object Graph {
     val und = und0.localCheckpoint()
     val bi = und.select($"a", $"b", $"w", $"a".as("u"), $"b".as("v"))
       .union(und.select($"a", $"b", $"w", $"b".as("u"), $"a".as("v")))
-    var labels = bi.select($"u".as("node")).distinct()
+    val labels0 = bi.select($"u".as("node")).distinct()
       .select($"node", $"node".as("c")).localCheckpoint()
-    var mst = und.limit(0)
-    var round = 0
-    var done = false
-    while (!done && round < MstMaxRounds) {
-      val cand = bi
-        .join(labels.select($"node".as("u"), $"c".as("cu")), "u")
-        .join(labels.select($"node".as("v"), $"c".as("cv")), "v")
-        .where($"cu" =!= $"cv")
-      val picks = cand
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"cu").orderBy($"w".desc, $"a", $"b")))
-        .where($"rn" === 1)
-        .select($"cu", $"cv", $"a", $"b", $"w").localCheckpoint()
-      if (picks.isEmpty) done = true
-      else {
-        mst = mst.union(picks.select($"a", $"b", $"w").distinct())
-        // Contraction: the pick graph is COMPONENT-level metadata (≤
-        // #components rows, halving every round), so it is contracted
-        // in one per-partition union-find pass on a single coalesced
-        // partition — the mapPartitions escape hatch used exactly where
-        // the brief reserves it (genuine per-partition imperative
-        // logic on a metadata-sized frame). One task, no inner
-        // convergence loop, no per-iteration driver actions; labels are
-        // canonicalized to the min member id, matching the oracle's
-        // min-reachable closure.
-        val comp = ufLabels(picks.select($"cu".as("s"), $"cv".as("d")))
-          .select(col("member").as("c"), col("label").as("nc"))
-        labels = labels
-          .join(comp, Seq("c"), "left")
-          .select($"node", coalesce($"nc", $"c").as("c"))
-          .localCheckpoint()
-        round += 1
-      }
-    }
-    if (!done) throw new IllegalStateException(
-      s"Borůvka failed to finish in $MstMaxRounds rounds")
+    // picks are kept for the whole loop (the forest accumulator reads
+    // them all); each round's labels replace the previous round's
+    val (_, mst) = Iterate.until((labels0, und.limit(0)), MstMaxRounds) {
+      case ((labels, forest), r) =>
+        val cand = bi
+          .join(labels.select($"node".as("u"), $"c".as("cu")), "u")
+          .join(labels.select($"node".as("v"), $"c".as("cv")), "v")
+          .where($"cu" =!= $"cv")
+        val picks = r.keep(cand
+          .withColumn("rn", row_number().over(
+            Window.partitionBy($"cu").orderBy($"w".desc, $"a", $"b")))
+          .where($"rn" === 1)
+          .select($"cu", $"cv", $"a", $"b", $"w"))
+        if (picks.isEmpty) None
+        else {
+          // Contraction: the pick graph is COMPONENT-level metadata (≤
+          // #components rows, halving every round), so it is contracted
+          // in one per-partition union-find pass on a single coalesced
+          // partition — the mapPartitions escape hatch used exactly where
+          // the brief reserves it (genuine per-partition imperative
+          // logic on a metadata-sized frame). One task, no inner
+          // convergence loop, no per-iteration driver actions; labels are
+          // canonicalized to the min member id, matching the oracle's
+          // min-reachable closure.
+          val comp = ufLabels(picks.select($"cu".as("s"), $"cv".as("d")))
+            .select(col("member").as("c"), col("label").as("nc"))
+          Some((r.pin(labels.join(comp, Seq("c"), "left")
+              .select($"node", coalesce($"nc", $"c").as("c"))),
+            forest.union(picks.select($"a", $"b", $"w").distinct())))
+        }
+    }.getOrElse(throw new IllegalStateException(
+      s"Borůvka failed to finish in $MstMaxRounds rounds"))
     mst.select($"a".as("src"), $"b".as("dst"), $"w")
   }
 
@@ -1280,15 +1188,7 @@ object Graph {
     }.mkString(",\n")
     val allPicks = (1 to R)
       .map(r => s"SELECT a, b, w FROM pick$r").mkString(" UNION ALL ")
-    s"""toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |tedges AS (
-       |  SELECT src, dst, count(*) AS cnt FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
+    s"""${tokenEdgeCtes("tedges")},
        |und AS MATERIALIZED (
        |  SELECT least(src, dst) AS a, greatest(src, dst) AS b,
        |    CAST(sum(cnt) AS BIGINT) AS w
@@ -1410,16 +1310,31 @@ object Graph {
     * the edge list (edge-count-sized, built once); each step is ONE
     * equi-join of the (starts × W) frontier against the interval table
     * on the current node — never a gather to the driver, state is
-    * O(active walks). Frontier lineage is truncated every 4 steps
-    * ([[CkptEvery]]-style); the plan chain between checkpoints is
-    * linear in steps. At 100 TB the frontier is billions of rows and
-    * the same L joins run shuffle-partitioned on the node key.
+    * O(active walks). [[graft.Iterate]] pins the frontier every 4 steps;
+    * the plan chain between pins is linear in steps, and every pin is
+    * kept, since the corpus reads every step. At 100 TB the frontier is
+    * billions of rows and the same L joins run shuffle-partitioned on
+    * the node key.
     */
   def randomWalksOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
+    val (intervals, starts) = walkPrep(rawEdges.localCheckpoint(), WalksPerNode)
+    walkCorpus(Iterate.scan(starts, 1 to WalkLen, every = 4) { (frontier, r) =>
+      r.pin(firstOrderStep(frontier, intervals, "walk", r.i)
+        .select($"start", $"wid", $"dst".as("node")))
+    })
+  }
+
+  /** The walks' shared inputs over a pinned (src, dst, cnt) edge list:
+    * each src's out-edges as cumulative-count intervals [lo, hi) with its
+    * out-count `oc`, and `walks` walks per source sitting on their start
+    * (start, wid, node); both pinned.
+    */
+  private def walkPrep(edges: DataFrame, walks: Int): (DataFrame, DataFrame) = {
+    val s = edges.sparkSession
+    import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val edges = rawEdges.localCheckpoint()
     val cum = Window.partitionBy($"src").orderBy($"dst")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val outW = edges.groupBy($"src").agg(sum($"cnt").as("oc"))
@@ -1429,25 +1344,81 @@ object Graph {
       .join(outW, "src")
       .select($"src", $"dst", $"lo", $"hi", $"oc")
       .localCheckpoint()
-    var frontier = edges.select($"src").distinct()
-      .crossJoin(broadcast(s.range(0, WalksPerNode).select($"id".as("wid"))))
+    val starts = edges.select($"src").distinct()
+      .crossJoin(broadcast(s.range(0, walks).select($"id".as("wid"))))
       .select($"src".as("start"), $"wid", $"src".as("node"))
       .localCheckpoint()
-    var out = frontier.select($"start", $"wid", lit(0L).as("step"), $"node")
-    for (t <- 1 to WalkLen) {
-      val r = conv(substring(md5(concat_ws(":",
-        lit("walk"), $"start", $"wid", lit(t - 1), $"node")), 1, 15), 16, 10)
-        .cast("long") % $"oc"
-      var next = frontier.join(intervals, $"node" === $"src")
-        .where(r >= $"lo" && r < $"hi")
-        .select($"start", $"wid", $"dst".as("node"))
-      if (t % 4 == 0) next = next.localCheckpoint()
-      frontier = next
-      out = out.union(
-        frontier.select($"start", $"wid", lit(t.toLong).as("step"), $"node"))
-    }
-    out
+    (intervals, starts)
   }
+
+  /** The salted md5-60 draw of walk (start, wid) on `node` at step `t`,
+    * mod `m`.
+    */
+  private def walkDraw(salt: String, t: Int, m: Column): Column =
+    conv(substring(md5(concat_ws(":",
+      lit(salt), col("start"), col("wid"), lit(t - 1), col("node"))), 1, 15), 16, 10)
+      .cast("long") % m
+
+  /** The first-order pick at step `t`: each walk on `frontier` joined to
+    * the one out-edge interval of its node that holds its draw.
+    */
+  private def firstOrderStep(frontier: DataFrame, intervals: DataFrame,
+      salt: String, t: Int): DataFrame = {
+    val r = walkDraw(salt, t, col("oc"))
+    frontier.join(intervals, col("node") === col("src"))
+      .where(r >= col("lo") && r < col("hi"))
+  }
+
+  /** (start, wid, step, node) rows of every step's frontier, step 0 first. */
+  private def walkCorpus(steps: Seq[DataFrame]): DataFrame =
+    steps.zipWithIndex.map { case (f, t) =>
+      f.select(col("start"), col("wid"), lit(t.toLong).as("step"), col("node"))
+    }.reduce(_ union _)
+
+  /** DuckDB restatement of [[walkPrep]]: the token edges, `outw`, the
+    * interval table `iv`, and `start` with `walks` walks per source.
+    */
+  private def walkPrepSql(walks: Int, start: String): String =
+    s"""WITH ${tokenEdgeCtes("edges", materialized = true)},
+       |outw AS (
+       |  SELECT src, CAST(sum(cnt) AS BIGINT) AS oc FROM edges GROUP BY src),
+       |iv AS MATERIALIZED (
+       |  SELECT e.src, e.dst,
+       |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - e.cnt
+       |      AS BIGINT) AS lo,
+       |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |      AS BIGINT) AS hi,
+       |    o.oc
+       |  FROM edges e JOIN outw o ON e.src = o.src),
+       |$start AS MATERIALIZED (
+       |  SELECT src AS start, CAST(wid AS BIGINT) AS wid, src AS node
+       |  FROM (SELECT DISTINCT src FROM edges)
+       |  CROSS JOIN (SELECT unnest(range(0, $walks)) AS wid))""".stripMargin
+
+  /** DuckDB restatement of [[walkDraw]] for the walk row `f`, before the
+    * mod; one line, since the step CTEs' margins would eat a leading `||`.
+    */
+  private def walkDrawSql(salt: String, t: Int): String =
+    s"CAST(('0x' || substring(md5('$salt:' || f.start || ':' || CAST(f.wid AS VARCHAR)" +
+      s" || ':${t - 1}:' || f.node), 1, 15)) AS BIGINT)"
+
+  /** DuckDB restatement of [[firstOrderStep]]: CTE `name` picks step `t`
+    * from the frontier CTE `from` as (start, wid, prev, node).
+    */
+  private def firstOrderStepSql(name: String, from: String, salt: String, t: Int): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT start, wid, prev, node FROM (
+       |    SELECT f.start, f.wid, f.node AS prev, i.dst AS node, i.lo, i.hi,
+       |      ${walkDrawSql(salt, t)} % i.oc AS r
+       |    FROM $from f JOIN iv i ON i.src = f.node)
+       |  WHERE r >= lo AND r < hi)""".stripMargin
+
+  /** DuckDB restatement of [[walkCorpus]] over the step CTEs `name`0..`len`. */
+  private def walkCorpusSql(name: String, len: Int): String = (0 to len)
+    .map(t => s"SELECT start, wid, CAST($t AS BIGINT) AS step, node FROM $name$t")
+    .mkString(" UNION ALL ")
 
   /** DuckDB restatement: identical edge build, cumulative intervals,
     * and md5-60 pick, with the [[WalkLen]] steps unrolled as
@@ -1456,46 +1427,9 @@ object Graph {
     * Every integer sum is CAST BIGINT (HUGEINT rule).
     */
   val randomWalksSql: String = {
-    val base =
-      s"""WITH toks AS (
-         |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-         |edges AS MATERIALIZED (
-         |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-         |    SELECT
-         |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-         |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-         |    FROM toks WHERE len(t) >= 2)
-         |  GROUP BY src, dst),
-         |outw AS (
-         |  SELECT src, CAST(sum(cnt) AS BIGINT) AS oc FROM edges GROUP BY src),
-         |iv AS MATERIALIZED (
-         |  SELECT e.src, e.dst,
-         |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - e.cnt
-         |      AS BIGINT) AS lo,
-         |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS hi,
-         |    o.oc
-         |  FROM edges e JOIN outw o ON e.src = o.src),
-         |s0 AS MATERIALIZED (
-         |  SELECT src AS start, CAST(wid AS BIGINT) AS wid, src AS node
-         |  FROM (SELECT DISTINCT src FROM edges)
-         |  CROSS JOIN (SELECT unnest(range(0, $WalksPerNode)) AS wid))""".stripMargin
-    val steps = (1 to WalkLen).map { t =>
-      s"""s$t AS MATERIALIZED (
-         |  SELECT start, wid, dst AS node FROM (
-         |    SELECT f.start, f.wid, i.dst, i.lo, i.hi,
-         |      CAST(('0x' || substring(md5('walk:' || f.start
-         |          || ':' || CAST(f.wid AS VARCHAR)
-         |          || ':${t - 1}:' || f.node), 1, 15)) AS BIGINT) % i.oc AS r
-         |    FROM s${t - 1} f JOIN iv i ON i.src = f.node)
-         |  WHERE r >= lo AND r < hi)""".stripMargin
-    }.mkString(",\n")
-    val rows = (0 to WalkLen)
-      .map(t => s"SELECT start, wid, CAST($t AS BIGINT) AS step, node FROM s$t")
-      .mkString(" UNION ALL ")
-    s"$base,\n$steps\n$rows"
+    val steps = (1 to WalkLen)
+      .map(t => firstOrderStepSql(s"s$t", s"s${t - 1}", "walk", t)).mkString(",\n")
+    s"${walkPrepSql(WalksPerNode, "s0")},\n$steps\n${walkCorpusSql("s", WalkLen)}"
   }
 
   /** Level-unroll bound for [[betweenness]] — must exceed the graph
@@ -1522,8 +1456,9 @@ object Graph {
     *
     * Scale shape: every frontier/backward step is an equi-join on
     * (source, node) keys — |pairs| ≤ n² state sharded by source, never
-    * a driver structure; the level loop is LAZY between checkpoint
-    * pins every 3 levels (the pagerank discipline). At 100 TB one
+    * a driver structure; the level loops run through [[graft.Iterate]],
+    * LAZY between pins every 3 levels (the pagerank discipline), every
+    * pin kept, since the backward pass reads every level. At 100 TB one
     * runs this on a sampled source set — the plan is unchanged, only
     * the seed frontier shrinks.
     */
@@ -1532,8 +1467,7 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
+    val nodes = nodesOf(edges)
     val deltas = brandesDeltas(edges, nodes.select($"node".as("s")), maxDepth)
     nodes.join(deltas, $"node" === $"v", "left_outer")
       .select($"node", coalesce($"b", lit(0.0)).as("betweenness"))
@@ -1549,34 +1483,15 @@ object Graph {
       maxDepth: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    var frontier = sources
-      .select($"s", $"s".as("v"), lit(1L).as("sigma"))
-      .localCheckpoint()
-    var seen = frontier.select($"s", $"v").localCheckpoint()
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    for (l <- 1 to maxDepth) {
-      frontier = frontier.join(edges, $"v" === $"src")
-        .select($"s", $"dst".as("v2"), $"sigma")
-        .join(seen.select($"s", $"v".as("v2")), Seq("s", "v2"), "left_anti")
-        .groupBy($"s", $"v2").agg(sum($"sigma").as("sigma"))
-        .select($"s", $"v2".as("v"), $"sigma")
-      seen = seen.union(frontier.select($"s", $"v"))
-      if (l % 3 == 0) {
-        frontier = frontier.localCheckpoint()
-        seen = seen.localCheckpoint()
-      }
-      levels += frontier
-    }
+    val levels = brandesLevels(edges, sources, maxDepth)
     val termExpr =
       """CAST(floor(CAST(sigma AS DOUBLE) / sigma_w
         |  * (1 + coalesce(delta_w, CAST(0 AS DOUBLE))) * 1e9 + 0.5) / 1e9
         |  AS DECIMAL(18,9))""".stripMargin
-    var dep: DataFrame = levels(maxDepth)
-      .select($"s", $"v", lit(0.0).as("delta")).where(lit(false))
-    val deps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (l <- (maxDepth - 1) to 1 by -1) {
-      dep = levels(l).join(edges, $"v" === $"src")
-        .join(levels(l + 1)
+    val none = levels(maxDepth).select($"s", $"v", lit(0.0).as("delta")).where(lit(false))
+    val deps = Iterate.scan(none, (maxDepth - 1) to 1 by -1, every = 3) { (dep, r) =>
+      r.pin(levels(r.i).join(edges, $"v" === $"src")
+        .join(levels(r.i + 1)
             .select($"s".as("sw"), $"v".as("w"), $"sigma".as("sigma_w")),
           $"s" === $"sw" && $"dst" === $"w")
         .join(dep.select($"s".as("s2"), $"v".as("w2"), $"delta".as("delta_w")),
@@ -1584,14 +1499,43 @@ object Graph {
         .select($"s", $"v", $"sigma", $"sigma_w", $"delta_w")
         .withColumn("term", expr(termExpr))
         .groupBy($"s", $"v")
-        .agg(sum($"term").cast("double").as("delta"))
-      if (l % 3 == 0) dep = dep.localCheckpoint()
-      deps += dep
-    }
+        .agg(sum($"term").cast("double").as("delta")))
+    }.tail
     val allDeps = deps.reduce(_ union _).where($"v" =!= $"s")
     allDeps.groupBy($"v")
       .agg(sum(expr("CAST(delta AS DECIMAL(18,9))")).cast("double").as("b"))
   }
+
+  /** Brandes' forward pass: levels 0..`maxDepth` of the level-synchronous
+    * BFS from every source in `sources` (column `s`), as (s, v, sigma)
+    * with sigma the shortest-path count — exact BIGINT sums. Frontier and
+    * seen set are pinned every 3 levels, every pin kept.
+    */
+  private def brandesLevels(edges: DataFrame, sources: DataFrame,
+      maxDepth: Int): Seq[DataFrame] = {
+    val s = edges.sparkSession
+    import s.implicits._
+    val f0 = sources.select($"s", $"s".as("v"), lit(1L).as("sigma")).localCheckpoint()
+    Iterate.scan((f0, f0.select($"s", $"v").localCheckpoint()), 1 to maxDepth,
+        every = 3) { case ((frontier, seen), r) =>
+      val next = frontier.join(edges, $"v" === $"src")
+        .select($"s", $"dst".as("v2"), $"sigma")
+        .join(seen.select($"s", $"v".as("v2")), Seq("s", "v2"), "left_anti")
+        .groupBy($"s", $"v2").agg(sum($"sigma").as("sigma"))
+        .select($"s", $"v2".as("v"), $"sigma")
+      (r.pin(next), r.pin(seen.union(next.select($"s", $"v"))))
+    }.map(_._1)
+  }
+
+  /** The `k` highest out-mass sources of a (src, dst, cnt) edge list
+    * (ties lexical — a total order, so both engines pick the same set),
+    * pinned, as column `s`: the seeds of [[betweennessApproxOnEdges]] and
+    * [[closenessOnEdges]].
+    */
+  private def hubSeeds(rawEdges: DataFrame, k: Int): DataFrame =
+    rawEdges.groupBy(col("src")).agg(sum(col("cnt")).as("m"))
+      .orderBy(desc("m"), col("src")).limit(k)
+      .select(col("src").as("s")).localCheckpoint()
 
   /** Seed count for the SAMPLED betweenness estimator. */
   val BetwApproxSeeds = 12
@@ -1623,11 +1567,8 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
-    val seeds = rawEdges.groupBy($"src").agg(sum($"cnt").as("m"))
-      .orderBy(desc("m"), $"src").limit(k)
-      .select($"src".as("s")).localCheckpoint()
+    val nodes = nodesOf(edges)
+    val seeds = hubSeeds(rawEdges, k)
     val deltas = brandesDeltas(edges, seeds, maxDepth)
     val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
     val nSeeds = seeds.agg(count(lit(1)).as("n_seeds"))
@@ -1639,103 +1580,82 @@ object Graph {
                |  * 1e6 + 0.5) / 1e6""".stripMargin).as("betweenness_est"))
   }
 
-  /** DuckDB restatement: forward levels f0..fD (σ as BIGINT sums,
-    * NOT-EXISTS dedupe against the running seen set), backward
-    * dependency CTEs with the identical 9-dp floor terms, decimal
-    * rollup per node.
+  /** DuckDB restatement of [[brandesLevels]]: the token edges, `nodes`,
+    * `seeds` (the query `seeds`, column `s`), and forward levels f0..f`depth`
+    * (σ as BIGINT sums, NOT-EXISTS dedupe against the running seen set).
     */
-  /** Forward-level / backward-dependency CTE chains shared by the
-    * exact and sampled betweenness oracles — both reference the f0 /
-    * seen0 / edges CTEs their caller assembles.
-    */
-  private lazy val betwFwdSql: String = (1 to BetwMaxDepth).map { l =>
-    s"""f$l AS MATERIALIZED (
-       |  SELECT f.s, e.dst AS v, CAST(sum(f.sigma) AS BIGINT) AS sigma
-       |  FROM f${l - 1} f JOIN edges e ON e.src = f.v
-       |  WHERE NOT EXISTS (
-       |    SELECT 1 FROM seen${l - 1} x WHERE x.s = f.s AND x.v = e.dst)
-       |  GROUP BY f.s, e.dst),
-       |seen$l AS MATERIALIZED (
-       |  SELECT s, v FROM seen${l - 1} UNION SELECT s, v FROM f$l)"""
-      .stripMargin
-  }.mkString(",\n")
-
-  private lazy val betwBwdSql: String = ((BetwMaxDepth - 1) to 1 by -1).map { l =>
-    val prevDep = if (l == BetwMaxDepth - 1) "bD" else s"b${l + 1}"
-    s"""b$l AS MATERIALIZED (
-       |  SELECT fl.s, fl.v,
-       |    CAST(sum(CAST(floor(CAST(fl.sigma AS DOUBLE) / fw.sigma
-       |      * (1 + coalesce(bw.delta, CAST(0 AS DOUBLE))) * 1e9 + 0.5)
-       |      / 1e9 AS DECIMAL(18,9))) AS DOUBLE) AS delta
-       |  FROM f$l fl
-       |  JOIN edges e ON e.src = fl.v
-       |  JOIN f${l + 1} fw ON fw.s = fl.s AND fw.v = e.dst
-       |  LEFT JOIN $prevDep bw ON bw.s = fl.s AND bw.v = e.dst
-       |  GROUP BY fl.s, fl.v)""".stripMargin
-  }.mkString(",\n")
-
-  private lazy val betwDepUnionSql: String = ((BetwMaxDepth - 1) to 1 by -1)
-    .map(l => s"SELECT s, v, delta FROM b$l").mkString(" UNION ALL ")
-
-  val betweennessSql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |edges AS MATERIALIZED (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)),
+  private def brandesLevelsSql(seeds: String, depth: Int): String = {
+    val levels = (1 to depth).map { l =>
+      s"""f$l AS MATERIALIZED (
+         |  SELECT f.s, e.dst AS v, CAST(sum(f.sigma) AS BIGINT) AS sigma
+         |  FROM f${l - 1} f JOIN edges e ON e.src = f.v
+         |  WHERE NOT EXISTS (
+         |    SELECT 1 FROM seen${l - 1} x WHERE x.s = f.s AND x.v = e.dst)
+         |  GROUP BY f.s, e.dst),
+         |seen$l AS MATERIALIZED (
+         |  SELECT s, v FROM seen${l - 1} UNION SELECT s, v FROM f$l)"""
+        .stripMargin
+    }.mkString(",\n")
+    s"""WITH ${tokenEdgeCtes("wedges", materialized = true)},
+       |edges AS MATERIALIZED (SELECT src, dst FROM wedges),
        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |f0 AS (SELECT node AS s, node AS v, CAST(1 AS BIGINT) AS sigma
-       |  FROM nodes),
+       |seeds AS ($seeds),
+       |f0 AS (SELECT s, s AS v, CAST(1 AS BIGINT) AS sigma FROM seeds),
        |seen0 AS (SELECT s, v FROM f0),
-       |$betwFwdSql,
+       |$levels""".stripMargin
+  }
+
+  /** DuckDB restatement of [[hubSeeds]] over the counted `wedges` CTE. */
+  private def hubSeedsSql(k: Int): String =
+    s"SELECT src AS s FROM wedges GROUP BY src ORDER BY sum(cnt) DESC, src LIMIT $k"
+
+  /** DuckDB restatement of [[brandesDeltas]]: [[brandesLevelsSql]], then
+    * backward dependency CTEs with the identical 9-dp floor terms and the
+    * per-node decimal rollup `bc` (v, b).
+    */
+  private def brandesDeltasSql(seeds: String): String = {
+    val bwd = ((BetwMaxDepth - 1) to 1 by -1).map { l =>
+      val prevDep = if (l == BetwMaxDepth - 1) "bD" else s"b${l + 1}"
+      s"""b$l AS MATERIALIZED (
+         |  SELECT fl.s, fl.v,
+         |    CAST(sum(CAST(floor(CAST(fl.sigma AS DOUBLE) / fw.sigma
+         |      * (1 + coalesce(bw.delta, CAST(0 AS DOUBLE))) * 1e9 + 0.5)
+         |      / 1e9 AS DECIMAL(18,9))) AS DOUBLE) AS delta
+         |  FROM f$l fl
+         |  JOIN edges e ON e.src = fl.v
+         |  JOIN f${l + 1} fw ON fw.s = fl.s AND fw.v = e.dst
+         |  LEFT JOIN $prevDep bw ON bw.s = fl.s AND bw.v = e.dst
+         |  GROUP BY fl.s, fl.v)""".stripMargin
+    }.mkString(",\n")
+    val deps = ((BetwMaxDepth - 1) to 1 by -1)
+      .map(l => s"SELECT s, v, delta FROM b$l").mkString(" UNION ALL ")
+    s"""${brandesLevelsSql(seeds, BetwMaxDepth)},
        |bD AS (SELECT s, v, CAST(0 AS DOUBLE) AS delta
        |  FROM f$BetwMaxDepth WHERE 1 = 0),
-       |$betwBwdSql
+       |$bwd,
+       |bc AS (
+       |  SELECT v, CAST(sum(CAST(delta AS DECIMAL(18,9))) AS DOUBLE) AS b
+       |  FROM ($deps) u WHERE v <> s GROUP BY v)""".stripMargin
+  }
+
+  val betweennessSql: String =
+    s"""${brandesDeltasSql("SELECT node AS s FROM nodes")}
        |SELECT n.node,
        |  coalesce(bc.b, CAST(0 AS DOUBLE)) AS betweenness
-       |FROM nodes n LEFT JOIN (
-       |  SELECT v, CAST(sum(CAST(delta AS DECIMAL(18,9))) AS DOUBLE) AS b
-       |  FROM ($betwDepUnionSql) u WHERE v <> s GROUP BY v) bc
-       |  ON bc.v = n.node""".stripMargin
+       |FROM nodes n LEFT JOIN bc ON bc.v = n.node""".stripMargin
 
   /** Sampled-betweenness oracle: identical chain CTEs, f0 restricted to
     * the k highest-out-mass seeds (same total order as the engine),
     * scaled n/k with the identical left-assoc double expression.
     */
   val betweennessApproxSql: String =
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |wedges AS MATERIALIZED (
-       |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)
-       |  GROUP BY src, dst),
-       |edges AS MATERIALIZED (SELECT src, dst FROM wedges),
-       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |seeds AS (
-       |  SELECT src AS s FROM (
-       |    SELECT src, sum(cnt) AS m FROM wedges GROUP BY src
-       |    ORDER BY m DESC, src LIMIT $BetwApproxSeeds)),
-       |f0 AS (SELECT s, s AS v, CAST(1 AS BIGINT) AS sigma FROM seeds),
-       |seen0 AS (SELECT s, v FROM f0),
-       |$betwFwdSql,
-       |bD AS (SELECT s, v, CAST(0 AS DOUBLE) AS delta
-       |  FROM f$BetwMaxDepth WHERE 1 = 0),
-       |$betwBwdSql
+    s"""${brandesDeltasSql(hubSeedsSql(BetwApproxSeeds))}
        |SELECT n.node,
        |  floor(coalesce(bc.b, CAST(0 AS DOUBLE))
        |      * (SELECT count(*) FROM nodes)
        |      / (SELECT count(*) FROM seeds) * 1e6 + 0.5) / 1e6
        |    AS betweenness_est
-       |FROM nodes n LEFT JOIN (
-       |  SELECT v, CAST(sum(CAST(delta AS DECIMAL(18,9))) AS DOUBLE) AS b
-       |  FROM ($betwDepUnionSql) u WHERE v <> s GROUP BY v) bc
-       |  ON bc.v = n.node""".stripMargin
+       |FROM nodes n LEFT JOIN bc ON bc.v = n.node""".stripMargin
 
   // ------------------------------------------------------- closeness
 
@@ -1767,35 +1687,18 @@ object Graph {
     * division micro-floors once.
     *
     * Scale shape: frontier/seen state is O(seeds·nodes) sharded by
-    * seed — the [[betweennessOnEdges]] forward pass restricted to a
-    * fixed seed frontier, which is exactly how it stays runnable at
-    * 100 TB (the seed list shrinks the state linearly; the plan is
-    * unchanged).
+    * seed — the [[betweennessOnEdges]] forward pass ([[brandesLevels]],
+    * σ dropped) restricted to a fixed seed frontier, which is exactly
+    * how it stays runnable at 100 TB (the seed list shrinks the state
+    * linearly; the plan is unchanged).
     */
   def closenessOnEdges(rawEdges: DataFrame,
       maxDepth: Int = ClosenessMaxDepth): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").distinct().localCheckpoint()
-    val seeds = rawEdges.groupBy($"src").agg(sum($"cnt").as("m"))
-      .orderBy(desc("m"), $"src").limit(ClosenessSeeds)
-      .select($"src".as("s")).localCheckpoint()
-    var frontier = seeds.select($"s", $"s".as("v"), lit(0L).as("dist"))
-    var seen = frontier.select($"s", $"v").localCheckpoint()
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    for (l <- 1 to maxDepth) {
-      frontier = frontier.join(edges, $"v" === $"src")
-        .select($"s", $"dst".as("v2"))
-        .join(seen.select($"s", $"v".as("v2")), Seq("s", "v2"), "left_anti")
-        .distinct()
-        .select($"s", $"v2".as("v"), lit(l.toLong).as("dist"))
-      seen = seen.union(frontier.select($"s", $"v"))
-      if (l % 3 == 0) {
-        frontier = frontier.localCheckpoint()
-        seen = seen.localCheckpoint()
-      }
-      levels += frontier
-    }
+    val levels = brandesLevels(edges, hubSeeds(rawEdges, ClosenessSeeds), maxDepth)
+      .zipWithIndex.map { case (f, l) => f.select($"s", $"v", lit(l.toLong).as("dist")) }
     levels.reduce(_ union _)
       .groupBy($"s")
       .agg(
@@ -1810,31 +1713,14 @@ object Graph {
         $"harmonic")
   }
 
-  /** DuckDB restatement: seed pick by the same total order, frontier
-    * CTEs g1..gD with NOT-EXISTS dedupe (the [[betweennessSql]] forward
-    * shape minus σ), per-seed rollup with identical rounding.
+  /** DuckDB restatement: seed pick by the same total order, the
+    * [[betweennessSql]] forward levels (σ dropped), per-seed rollup with
+    * identical rounding.
     */
   val closenessSql: String = {
-    val fwd = (1 to ClosenessMaxDepth).map { l =>
-      s"""g$l AS MATERIALIZED (
-         |  SELECT DISTINCT f.s, e.dst AS v, CAST($l AS BIGINT) AS dist
-         |  FROM g${l - 1} f JOIN ed e ON e.src = f.v
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM gseen${l - 1} x WHERE x.s = f.s AND x.v = e.dst)),
-         |gseen$l AS MATERIALIZED (
-         |  SELECT s, v FROM gseen${l - 1} UNION SELECT s, v FROM g$l)"""
-        .stripMargin
-    }.mkString(",\n")
     val lvlUnion = (0 to ClosenessMaxDepth)
-      .map(l => s"SELECT s, v, dist FROM g$l").mkString(" UNION ALL ")
-    s"""WITH $tokenEdgesCtes,
-       |ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
-       |seeds AS (
-       |  SELECT src AS s FROM edges GROUP BY src
-       |  ORDER BY sum(cnt) DESC, src LIMIT $ClosenessSeeds),
-       |g0 AS (SELECT s, s AS v, CAST(0 AS BIGINT) AS dist FROM seeds),
-       |gseen0 AS (SELECT s, v FROM g0),
-       |$fwd
+      .map(l => s"SELECT s, v, CAST($l AS BIGINT) AS dist FROM f$l").mkString(" UNION ALL ")
+    s"""${brandesLevelsSql(hubSeedsSql(ClosenessSeeds), ClosenessMaxDepth)}
        |SELECT s AS word,
        |  CAST(count(*) - 1 AS BIGINT) AS n_reached,
        |  CAST(sum(dist) AS BIGINT) AS sum_dist,
@@ -1860,86 +1746,28 @@ object Graph {
     *   r₀(v)    = 1{v = seed}
     *   rₜ₊₁(v) = 0.15·1{v = seed} + 0.85 · Σ_{u→v} rₜ(u)·w_uv
     *
-    * Same Pregel-on-DataFrames shape and decimal-summed contributions
-    * as pagerank; both re-rounds use the floor(x·1e9+0.5)/1e9 idiom
-    * (the `doc_lm_kn_nll` 10× lesson — native round(double, n) is a
-    * cross-engine boundary hazard).
+    * It is [[Damped.ranks]] with this r₀ and teleport term: the same
+    * Pregel-on-DataFrames shape, decimal-summed contributions and
+    * floor(x·1e9+0.5)/1e9 re-rounds as pagerank.
     */
   def pprOnEdges(rawEdges: DataFrame, iters: Int = Iters): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
-    val edges = rawEdges.localCheckpoint()
-    val outW = edges.groupBy($"src").agg(sum($"cnt").as("oc"))
-    val weighted = edges.join(outW, "src")
-      .select($"src", $"dst",
-        ($"cnt".cast("double") / $"oc".cast("double")).as("w"))
-      .localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
-    val seed = outW.orderBy($"oc".desc, $"src").limit(1)
-      .select($"src").as[String].head().replace("'", "''")
-    var ranks = nodes.select($"node",
-      when($"node" === seed, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = weighted.join(ranks, $"src" === $"node")
-        .select($"dst", expr(
-          "CAST(floor(rank * w * 1e9 + 0.5) / 1e9 AS DECIMAL(18,9))").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("csum"))
-      ranks = nodes.join(contribs, $"node" === $"dst", "left_outer")
-        .select($"node", expr(
-          s"""floor((CASE WHEN node = '$seed' THEN CAST(0.15 AS DOUBLE)
-             |  ELSE CAST(0 AS DOUBLE) END
-             |  + CAST(0.85 AS DOUBLE)
-             |    * coalesce(CAST(csum AS DOUBLE), CAST(0 AS DOUBLE)))
-             |  * 1e9 + 0.5) / 1e9""".stripMargin).as("ppr"))
-        .select($"node", $"ppr".as("rank"))
-      if (i % CkptEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select($"node", $"rank".as("ppr"))
+    val d = new Damped(rawEdges)
+    val seed = d.outW.orderBy($"oc".desc, $"src").limit(1)
+      .select($"src").as[String].head()
+    val isSeed = $"node" === seed
+    d.ranks(when(isSeed, lit(1.0)).otherwise(lit(0.0)),
+      when(isSeed, lit(0.15)).otherwise(lit(0.0)), iters)
+      .select($"node", $"rank".as("ppr"))
   }
 
-  /** DuckDB restatement: pagerank's edge CTEs, the seed pick, the
-    * unrolled iterations with identical floor-idiom re-rounds.
-    */
+  /** DuckDB restatement: [[dampedSql]] with the seed's r₀ and teleport. */
   val pprSql: String = {
-    val base =
-      s"""WITH toks AS (
-         |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-         |edges AS (
-         |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-         |    SELECT
-         |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-         |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-         |    FROM toks WHERE len(t) >= 2)
-         |  GROUP BY src, dst),
-         |outw AS (SELECT src, sum(cnt) AS oc FROM edges GROUP BY src),
-         |w AS (
-         |  SELECT e.src, e.dst, CAST(e.cnt AS DOUBLE) / CAST(o.oc AS DOUBLE) AS w
-         |  FROM edges e JOIN outw o ON e.src = o.src),
-         |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |sd AS (SELECT src FROM outw ORDER BY oc DESC, src LIMIT 1),
-         |rp0 AS (
-         |  SELECT node,
-         |    CASE WHEN node = (SELECT src FROM sd) THEN CAST(1 AS DOUBLE)
-         |         ELSE CAST(0 AS DOUBLE) END AS rank
-         |  FROM nodes)""".stripMargin
-    val iters = (1 to Iters).map { i =>
-      s"""rp$i AS (
-         |  SELECT nd.node,
-         |    floor((CASE WHEN nd.node = (SELECT src FROM sd)
-         |        THEN CAST(0.15 AS DOUBLE)
-         |      ELSE CAST(0 AS DOUBLE) END
-         |      + CAST(0.85 AS DOUBLE)
-         |        * coalesce(CAST(s.csum AS DOUBLE), CAST(0 AS DOUBLE)))
-         |      * 1e9 + 0.5) / 1e9 AS rank
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT w.dst,
-         |      sum(CAST(floor(r.rank * w.w * 1e9 + 0.5) / 1e9
-         |        AS DECIMAL(18,9))) AS csum
-         |    FROM w JOIN rp${i - 1} r ON w.src = r.node GROUP BY w.dst) s
-         |    ON nd.node = s.dst)""".stripMargin
-    }.mkString(",\n")
-    s"$base,\n$iters\nSELECT node, rank AS ppr FROM rp$Iters"
+    def atSeed(x: String) =
+      s"CASE WHEN node = (SELECT src FROM sd) THEN CAST($x AS DOUBLE) ELSE CAST(0 AS DOUBLE) END"
+    dampedSql(tokenEdgeCtes("edges"), atSeed("1"), atSeed("0.15"),
+      s"SELECT node, rank AS ppr FROM r$Iters")
   }
 
   /** node2vec walk budget: walks per start node and steps per walk. */
@@ -1973,46 +1801,30 @@ object Graph {
     * BIGINT-exact on both engines; adjacency (distance-1 test) is a
     * left join against the undirected edge set. Deterministic end to
     * end — replayed by the oracle's unrolled step CTEs and the spec's
-    * independent Scala walker.
+    * independent Scala walker. Step 1 is random walks' own pick
+    * ([[firstOrderStep]], n2v salt) on random walks' intervals and
+    * starts; [[graft.Iterate]] pins steps 3 and 6 and keeps every pin
+    * for the corpus.
     */
   def node2vecOnEdges(rawEdges: DataFrame): DataFrame = {
     val s = rawEdges.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val edges = rawEdges.localCheckpoint()
-    val cum = Window.partitionBy($"src").orderBy($"dst")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outW = edges.groupBy($"src").agg(sum($"cnt").as("oc"))
-    val intervals = edges
-      .withColumn("hi", sum($"cnt").over(cum))
-      .withColumn("lo", $"hi" - $"cnt")
-      .join(outW, "src")
-      .select($"src", $"dst", $"lo", $"hi", $"oc")
-      .localCheckpoint()
+    val (intervals, starts) = walkPrep(edges, N2vWalks)
     val und = edges.select($"src".as("au"), $"dst".as("av"))
       .union(edges.select($"dst".as("au"), $"src".as("av")))
       .distinct()
       .withColumn("adj", lit(1))
       .localCheckpoint()
-    var frontier = edges.select($"src").distinct()
-      .crossJoin(broadcast(s.range(0, N2vWalks).select($"id".as("wid"))))
-      .select($"src".as("start"), $"wid", $"src".as("node"))
-      .localCheckpoint()
-    var out = frontier.select($"start", $"wid", lit(0L).as("step"), $"node")
-    // step 1: first-order (identical pick rule to randomWalks, n2v salt)
-    val r1 = conv(substring(md5(concat_ws(":",
-      lit("n2v"), $"start", $"wid", lit(0), $"node")), 1, 15), 16, 10)
-      .cast("long") % $"oc"
-    var f2 = frontier.join(intervals, $"node" === $"src")
-      .where(r1 >= $"lo" && r1 < $"hi")
+    val step1 = firstOrderStep(starts, intervals, "n2v", 1)
       .select($"start", $"wid", $"node".as("prev"), $"dst".as("node"))
       .localCheckpoint()
-    out = out.union(f2.select($"start", $"wid", lit(1L).as("step"), $"node"))
     val wlk = Window.partitionBy($"start", $"wid")
     val wcum = wlk.orderBy($"dst")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    for (t <- 2 to N2vLen) {
-      val cands = f2.join(edges, $"node" === $"src")
+    walkCorpus(starts +: Iterate.scan(step1, 2 to N2vLen, every = 3) { (f, r) =>
+      val cands = f.join(edges, $"node" === $"src")
         .join(und, $"prev" === $"au" && $"dst" === $"av", "left")
         .withColumn("m",
           when($"dst" === $"prev", N2vReturnM)
@@ -2021,59 +1833,17 @@ object Graph {
         .withColumn("hi", sum($"w").over(wcum))
         .withColumn("lo", $"hi" - $"w")
         .withColumn("tot", sum($"w").over(wlk))
-      val r = conv(substring(md5(concat_ws(":",
-        lit("n2v"), $"start", $"wid", lit(t - 1), $"node")), 1, 15), 16, 10)
-        .cast("long") % $"tot"
-      var next = cands.where(r >= $"lo" && r < $"hi")
-        .select($"start", $"wid", $"node".as("prev"), $"dst".as("node"))
-      if (t % 3 == 0) next = next.localCheckpoint()
-      f2 = next
-      out = out.union(f2.select($"start", $"wid", lit(t.toLong).as("step"), $"node"))
-    }
-    out
+      val draw = walkDraw("n2v", r.i, $"tot")
+      r.pin(cands.where(draw >= $"lo" && draw < $"hi")
+        .select($"start", $"wid", $"node".as("prev"), $"dst".as("node")))
+    })
   }
 
-  /** DuckDB restatement: unrolled step CTEs; per-walk window sums CAST
-    * BIGINT (HUGEINT rule); identical α multipliers and md5-60 draws.
+  /** DuckDB restatement: random walks' prep and first-order step CTEs,
+    * then unrolled step CTEs; per-walk window sums CAST BIGINT (HUGEINT
+    * rule); identical α multipliers and md5-60 draws.
     */
   val node2vecSql: String = {
-    val base =
-      s"""WITH toks AS (
-         |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-         |edges AS MATERIALIZED (
-         |  SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt FROM (
-         |    SELECT
-         |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-         |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-         |    FROM toks WHERE len(t) >= 2)
-         |  GROUP BY src, dst),
-         |outw AS (
-         |  SELECT src, CAST(sum(cnt) AS BIGINT) AS oc FROM edges GROUP BY src),
-         |iv AS MATERIALIZED (
-         |  SELECT e.src, e.dst,
-         |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - e.cnt
-         |      AS BIGINT) AS lo,
-         |    CAST(sum(e.cnt) OVER (PARTITION BY e.src ORDER BY e.dst
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS hi,
-         |    o.oc
-         |  FROM edges e JOIN outw o ON e.src = o.src),
-         |und AS MATERIALIZED (
-         |  SELECT src AS au, dst AS av FROM edges
-         |  UNION SELECT dst, src FROM edges),
-         |n0 AS MATERIALIZED (
-         |  SELECT src AS start, CAST(wid AS BIGINT) AS wid, src AS node
-         |  FROM (SELECT DISTINCT src FROM edges)
-         |  CROSS JOIN (SELECT unnest(range(0, $N2vWalks)) AS wid)),
-         |n1 AS MATERIALIZED (
-         |  SELECT start, wid, prev, node FROM (
-         |    SELECT f.start, f.wid, f.node AS prev, i.dst AS node, i.lo, i.hi,
-         |      CAST(('0x' || substring(md5('n2v:' || f.start
-         |          || ':' || CAST(f.wid AS VARCHAR)
-         |          || ':0:' || f.node), 1, 15)) AS BIGINT) % i.oc AS r
-         |    FROM n0 f JOIN iv i ON i.src = f.node)
-         |  WHERE r >= lo AND r < hi)""".stripMargin
     val steps = (2 to N2vLen).map { t =>
       s"""n$t AS MATERIALIZED (
          |  SELECT start, wid, cur AS prev, dst AS node FROM (
@@ -2095,19 +1865,19 @@ object Graph {
          |          e.cnt * (CASE WHEN e.dst = f.prev THEN $N2vReturnM
          |            WHEN u.au IS NOT NULL THEN $N2vNearM
          |            ELSE $N2vFarM END) AS w,
-         |          CAST(('0x' || substring(md5('n2v:' || f.start
-         |              || ':' || CAST(f.wid AS VARCHAR)
-         |              || ':${t - 1}:' || f.node), 1, 15)) AS BIGINT) AS rh
+         |          ${walkDrawSql("n2v", t)} AS rh
          |        FROM n${t - 1} f
          |        JOIN edges e ON e.src = f.node
          |        LEFT JOIN und u ON u.au = f.prev AND u.av = e.dst) c))
          |  WHERE r >= lo AND r < hi)""".stripMargin
     }.mkString(",\n")
-    val rows = (s"SELECT start, wid, CAST(0 AS BIGINT) AS step, node FROM n0" +:
-      (1 to N2vLen).map(t =>
-        s"SELECT start, wid, CAST($t AS BIGINT) AS step, node FROM n$t"))
-      .mkString(" UNION ALL ")
-    s"$base,\n$steps\n$rows"
+    s"""${walkPrepSql(N2vWalks, "n0")},
+       |und AS MATERIALIZED (
+       |  SELECT src AS au, dst AS av FROM edges
+       |  UNION SELECT dst, src FROM edges),
+       |${firstOrderStepSql("n1", "n0", "n2v", 1)},
+       |$steps
+       |${walkCorpusSql("n", N2vLen)}""".stripMargin
   }
 
   // ------------------------------------------- neighborhood function
@@ -2144,26 +1914,23 @@ object Graph {
     val s = rawEdges.sparkSession
     import s.implicits._
     val edges = rawEdges.select($"src", $"dst").localCheckpoint()
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst")).distinct().localCheckpoint()
+    val nodes = nodesOf(edges)
     val (idx, mv) = Sketches.hllRowSignals($"node")
-    var regs = nodes.select($"node", idx.as("idx"), mv.as("m_val"))
+    val regs0 = nodes.select($"node", idx.as("idx"), mv.as("m_val"))
       .localCheckpoint()
     def nfAt(t: Int, r: DataFrame): DataFrame =
       Sketches.hllFinalize(r, Seq("node"))
         .agg(sum($"hll_est".cast("decimal(18,4)")).cast("double").as("nf_est"))
         .select(lit(t.toLong).as("t"), $"nf_est")
-    val curve = scala.collection.mutable.ArrayBuffer(nfAt(0, regs))
-    for (t <- 1 to rounds) {
-      regs = regs
+    // registers pinned every 2 rounds, every pin kept: the curve reads
+    // every round's registers
+    Iterate.scan(regs0, 1 to rounds, every = 2) { (regs, r) =>
+      r.pin(regs
         .unionByName(edges
           .join(regs.withColumnRenamed("node", "nbr"), $"dst" === $"nbr")
           .select($"src".as("node"), $"idx", $"m_val"))
-        .groupBy($"node", $"idx").agg(max($"m_val").as("m_val"))
-      if (t % 2 == 0) regs = regs.localCheckpoint()
-      curve += nfAt(t, regs)
-    }
-    curve.reduce(_ unionByName _)
+        .groupBy($"node", $"idx").agg(max($"m_val").as("m_val")))
+    }.zipWithIndex.map { case (regs, t) => nfAt(t, regs) }.reduce(_ unionByName _)
   }
 
   /** DuckDB restatement: register tables r0..rT unrolled as
@@ -2193,14 +1960,7 @@ object Graph {
          |         AS DOUBLE) + ($HllM - count(*))) AS raw_est
          |  FROM r$t GROUP BY node)""".stripMargin
     val curve = (0 to AnfRounds).map(estAt).mkString(" UNION ALL ")
-    s"""WITH toks AS (
-       |  SELECT ${TextOps.duckTokensExpr} AS t FROM documents),
-       |edges AS MATERIALIZED (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT
-       |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS src,
-       |      unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS dst
-       |    FROM toks WHERE len(t) >= 2)),
+    s"""WITH ${tokenEdgeCtes("edges", counted = false, materialized = true)},
        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
        |r0 AS MATERIALIZED (
        |  SELECT node, hv // $HllRemMod AS idx,

@@ -221,7 +221,7 @@ object PlanLintSpec {
     "sim_ivfpq_probe_curve",
     // collects the bounded query-cell ranking + radius truth count
     "sim_range_probe_curve",
-    // iterative frontier loop with per-4-step lineage truncation; the
+    // iterative frontier loop (graft.Iterate) with a pin every 4 steps; the
     // walk-multiplicity scaffold is a 3-row broadcast cross hidden
     // behind the initial checkpoint, every step join is an equi-join
     "graph_random_walks",
