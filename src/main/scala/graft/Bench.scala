@@ -102,7 +102,7 @@ object Bench {
     catch { case NonFatal(_) => () }
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1)
+      try Tables.read(spark, s"$sfDir/$t.parquet").limit(1)
         .write.format("noop").mode("overwrite").save()
       catch { case NonFatal(_) => () }
     }

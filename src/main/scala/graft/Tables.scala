@@ -1,17 +1,74 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
-/** Loaders for the driver-generated parquet tables (see /root/repo/TESTDATA.md).
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StructType
+
+/** Loaders for the driver-generated parquet tables (see TESTDATA.md)
+  * and the one parquet reader of the program.
   *
-  * Schema is fixed/known at compile time — mirroring the reference's
-  * compile-time Avro schema discipline (reference `build.sbt:7-15`,
-  * `src/main/avro/twitter.avsc`) — so no runtime inference is needed;
-  * parquet footers carry the schema and Catalyst prunes columns at scan.
+  * Spark infers a schema-less parquet read's schema with a Spark job
+  * (`ParquetUtils.inferSchema` → `SchemaMergeUtils.mergeSchemasInParallel`)
+  * that reads one footer. [[read]] and [[schemaOf]] get the same schema
+  * on the driver instead: they list the path, take the first data file
+  * by path (Spark's rule when schemas are not merged), and convert its
+  * footer with Spark's own converter under the session's settings, so
+  * the scan starts with a declared schema and no inference job. Where
+  * that rule is not the whole of Spark's ([[footerSchema]]) they leave
+  * the read to Spark, so its schema and its errors stay Spark's. The
+  * footer is read on every call: nothing is cached. Catalyst still
+  * prunes columns at the scan.
   */
 object Tables {
+
+  /** `path`'s parquet, scanned with the schema Spark would infer. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The schema of `spark.read.parquet(path)`, without its inference job. */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    footerSchema(spark, path).getOrElse(spark.read.parquet(path).schema)
+
+  /** Spark's inferred schema of `path`, from one footer read on the
+    * driver, when `path` is one parquet file or a flat directory of them.
+    * None, so that Spark infers it, for a glob, schema merging, no data
+    * file, any error, or an entry that makes Spark's listing more than a
+    * flat list of data files: a subdirectory (`k=v` partitions) or a
+    * `_`-name Spark reads (`_metadata`, `_common_metadata`,
+    * `_spark_metadata`, a `_k=v` partition). Names Spark's file index
+    * hides (`.x`, `x._COPYING_`, `_SUCCESS`) are skipped.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (path.exists("{}[]*?\\".contains(_)) ||
+        spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val leaves = root.getFileSystem(conf).listStatus(root).toSeq.filterNot { f =>
+        val n = f.getPath.getName
+        n.startsWith(".") || n.endsWith("._COPYING_") || n == "_SUCCESS"
+      }
+      if (leaves.isEmpty || leaves.exists(f => f.isDirectory || f.getPath.getName.startsWith("_")))
+        None
+      else {
+        val first = leaves.minBy(_.getPath.toString)
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        Some(ColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, footer), converter)))
+      }
+    } catch { case NonFatal(_) => None }
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -36,7 +93,7 @@ object Tables {
   def eventsRawNanos(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     Session.install(s)
-    val df = s.read.parquet(path)
+    val df = read(s, path)
     df.schema.fields.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType => df
       case Some(_) =>

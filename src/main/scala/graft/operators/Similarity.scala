@@ -1015,7 +1015,7 @@ object Similarity {
     import s.implicits._
     val icents = ivfCentroids(s, dir)
     val bc = s.sparkContext.broadcast(icents)
-    val lists = s.read.parquet(ivfPqListsDir(s, dir))
+    val lists = Tables.read(s, ivfPqListsDir(s, dir))
     val probeRows = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding")
       .where($"vec_id" < 10)

@@ -152,7 +152,7 @@ object FileSources {
       .write.mode("overwrite").partitionBy("dt").parquet(out)
     // the partition directory column comes back type-inferred as DATE;
     // filter on it raw (pruning), cast to string only at the output
-    s.read.parquet(out)
+    Tables.read(s, out)
       .where($"dt" >= "2024-01-05" && $"dt" < "2024-01-08")
       .groupBy($"dt".cast("string").as("dt"), $"event_type")
       .agg(count(lit(1)).as("cnt"),
@@ -279,7 +279,7 @@ object FileSources {
     Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_partkey", $"l_quantity", $"l_extendedprice")
       .write.mode("overwrite").option("compression", "zstd").parquet(out)
-    s.read.parquet(out)
+    Tables.read(s, out)
       .agg(count(lit(1)).as("n_rows"),
         sum($"l_quantity".cast("decimal(18,2)")).cast("double").as("sum_qty"),
         sum($"l_extendedprice".cast("decimal(18,2)")).cast("double")

@@ -52,7 +52,7 @@ object StreamQueries {
     */
   private def stagingFrame(s: SparkSession, path: String) =
     if (path.endsWith("/events.parquet")) graft.Tables.eventsRawNanos(s, path)
-    else s.read.parquet(path)
+    else graft.Tables.read(s, path)
 
   /** Stage a table as N parquet files so AvailableNow with
     * `maxFilesPerTrigger = 1` genuinely drains it across N triggers —
@@ -89,7 +89,7 @@ object StreamQueries {
       copies: Boolean = false): DataFrame = {
     val dir =
       if (copies) stageAsDirCopies(s, path, parts) else stageAsDirParts(s, path, parts)
-    s.readStream.schema(s.read.parquet(dir).schema)
+    s.readStream.schema(graft.Tables.schemaOf(s, dir))
       .option("maxFilesPerTrigger", 1).parquet(dir)
   }
 
@@ -270,8 +270,7 @@ object StreamQueries {
       closedCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = s.read.parquet(srcDir).schema
-    val reader0 = s.readStream.schema(schema)
+    val reader0 = s.readStream.schema(graft.Tables.schemaOf(s, srcDir))
     val reader = maxFilesPerTrigger.fold(reader0)(n =>
       reader0.option("maxFilesPerTrigger", n.toLong))
     val ev = reader.parquet(srcDir)
@@ -807,8 +806,7 @@ object StreamQueries {
   def rateLimitedWordCount(s: SparkSession, srcDir: String,
       maxFilesPerTrigger: Int,
       latestFirst: Boolean = false): (DataFrame, Array[Long]) = {
-    val schema = s.read.parquet(srcDir).schema
-    val lines = s.readStream.schema(schema)
+    val lines = s.readStream.schema(graft.Tables.schemaOf(s, srcDir))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("latestFirst", latestFirst)
       .parquet(srcDir)

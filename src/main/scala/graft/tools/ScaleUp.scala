@@ -37,7 +37,7 @@ object ScaleUp {
     new java.io.File(outDir).mkdirs()
 
     def read(t: String): DataFrame =
-      spark.read.parquet(s"$inDir/$t.parquet")
+      graft.Tables.read(spark, s"$inDir/$t.parquet")
     def write(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite")
         .parquet(s"$outDir/$t.parquet")

@@ -42,6 +42,12 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** `t` with every field, element and value nullable, as a file
+    * relation exposes its data schema (`asNullable` is private[spark]).
+    */
+  def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    t.asNullable
+
   /** Apply a SparkSessionExtensions' injected functions to a registry
     * (the session-bootstrap step, exposed for tests).
     */

@@ -17,15 +17,19 @@ object SourceLines {
       .map { case (l, i) => (l.replaceAll("//.*$", ""), i + 1) }
       .filterNot { case (l, _) => Seq("*", "/*").exists(l.trim.startsWith) }
 
-  /** Line numbers of the object member `def name` in `f`, from its
-    * signature to its closing brace.
+  /** Line numbers of the object member `def name` in `f`: from its
+    * signature to its closing brace, or for a def without braces, to its
+    * last line indented deeper than the member.
     */
   def defLines(f: Path, name: String): Range = {
     val lines = code(f)
     val sig = s"def $name\\b".r
     val from = lines.collectFirst { case (l, n) if sig.findFirstIn(l).isDefined => n }
     assert(from.isDefined, s"$f no longer defines `def $name`")
-    val to = lines.collectFirst { case (l, n) if n > from.get && l == "  }" => n }.get
+    val body = lines.dropWhile(_._2 <= from.get)
+      .takeWhile { case (l, _) => l.isBlank || l.startsWith("   ") }
+    val end = body.lastOption.fold(from.get)(_._2)
+    val to = lines.find(_._2 > end).filter(_._1 == "  }").fold(end)(_._2)
     from.get to to
   }
 }

@@ -12,6 +12,9 @@ sort columns by name, sort rows, and compare values cell-by-cell.
 every query whose SQL in verifyOutDir/oracle_sql.json differs from its
 SQL in the old json (e.g. a parent commit's Verify dump), it runs both
 strings in DuckDB and compares their rows the same way.
+
+In both modes an oracle DuckDB cannot run is a `[FAIL-error]` line and
+one failure; the queries after it still get their verdicts.
 """
 import sys, json, glob, os
 import duckdb
@@ -127,7 +130,12 @@ for name in sorted(os.listdir(out_dir)):
     if name not in oracles:
         print(f"[rows-only] {name}: {len(spark_df)} rows")
         continue
-    duck_df = con.sql(oracles[name]).df()
+    try:
+        duck_df = con.sql(oracles[name]).df()
+    except duckdb.Error as e:
+        print(f"[FAIL-error] {name}: {str(e).splitlines()[0]}")
+        fails += 1
+        continue
     if not same(name, norm(spark_df), norm(duck_df)):
         fails += 1
 sys.exit(1 if fails else 0)
